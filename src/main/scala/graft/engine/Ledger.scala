@@ -9,10 +9,11 @@ import scala.jdk.CollectionConverters._
   *
   * Re-expresses the reference's Status lifecycle (StatusNew/StatusProcessed,
   * metric_model.go:11-16) and bulkLoad recovery (manager.go:312-354): a
-  * partition is `pending` while its pass runs and `done` only after the
-  * verdict/violation write commits (ST9 graceful-drain analog). Resume = skip
-  * `done`, re-run `pending`; outputs are idempotent (deterministic violation
-  * ids), so replay is exactly-once in effect.
+  * partition is `pending` while its outputs are written and `done` only
+  * after the verdict/violation write commits (ST9 graceful-drain analog).
+  * Resume = skip `done`, re-run the rest (`pending`, or never marked because
+  * the run stopped inside its pass); outputs are idempotent (deterministic
+  * violation ids), so replay is exactly-once in effect.
   *
   * Two storage backends, selected by [[Ledger.apply]]:
   *   - [[FileLedger]] (a directory): one tiny JSON file per partition,

@@ -361,16 +361,24 @@ object TableIO {
 
   private def unq(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
 
-  private def parseEntries(json: String): Map[String, String] = {
-    val pair = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
+  /** The body of a JSON string literal: runs of plain characters and
+    * backslash escapes, all quantifiers possessive, so java.util.regex
+    * matches it iteratively. The alternation form `(?:[^"\\]|\\.)*`
+    * recurses once per character and overflows the stack on a manifest's
+    * escaped schema string.
+    */
+  private val JsonStringBody = """[^"\\]*+(?:\\.[^"\\]*+)*+"""
+
+  private[engine] def parseEntries(json: String): Map[String, String] = {
+    val pair = s""""($JsonStringBody)"\\s*:\\s*"($JsonStringBody)"""".r
     pair.findAllMatchIn(json)
       .map(m => (unq(m.group(1)), unq(m.group(2))))
       .filter(_._2.startsWith(".snap-")) // skip header fields (schema etc.)
       .toMap
   }
 
-  private def parseSchema(json: String): Option[org.apache.spark.sql.types.StructType] = {
-    val m = "\"schema\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(json)
+  private[engine] def parseSchema(json: String): Option[org.apache.spark.sql.types.StructType] = {
+    val m = s""""schema"\\s*:\\s*"($JsonStringBody)"""".r.findFirstMatchIn(json)
     m.flatMap { g =>
       try Some(org.apache.spark.sql.types.DataType.fromJson(unq(g.group(1)))
         .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -489,6 +497,7 @@ object TableIO {
     val json = manifestJson(spark, table)
     if (json.isEmpty) return spark.read.parquet(table) // rename-mode table
     val entries = parseEntries(json.get)
+    val schema = parseSchema(json.get)
     if (entries.isEmpty) {
       // a manifest table whose every partition is currently empty (e.g. a
       // violations table on a clean corpus): read back as an empty frame
@@ -498,7 +507,7 @@ object TableIO {
       // since the versioned format records one): fail naming the cause,
       // not with a zero-column frame whose UNRESOLVED_COLUMN error would
       // point at the innocent downstream query.
-      return parseSchema(json.get)
+      return schema
         .map(s => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
         .getOrElse(throw new IllegalStateException(
@@ -512,8 +521,12 @@ object TableIO {
       val base = new Path(new Path(table), snapName).toString
       val dirs = parts.keys.toSeq.sorted.map(p =>
         s"$base/$partitionCol=${ExternalCatalogUtils.escapePathName(p)}")
-      // basePath keeps the hive partition column in the schema
-      spark.read.option("basePath", base).parquet(dirs: _*)
+      // basePath keeps the hive partition column in the schema. The
+      // recorded schema types it as written; inferred per snapshot, a
+      // snapshot whose live dirs are all dates reads `partition` as DATE
+      // and its union with one holding "<global>" fails to cast.
+      val reader = spark.read.option("basePath", base)
+      schema.fold(reader)(reader.schema).parquet(dirs: _*)
       // allowMissingColumns: snapshots from different commits may span a
       // schema evolution (an upgrade added a column); old snapshots read
       // with nulls there instead of making the whole table unreadable

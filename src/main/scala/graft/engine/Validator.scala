@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Top-level (encoder-friendly) verdict row. */
 final case class VerdictRow(
@@ -159,20 +160,15 @@ object Validator {
     // concurrently, so validate() costs ~max of the two scans instead of
     // their sum (r6: this overlap + the extractTextFast hot path took the
     // bench full-suite pass from 2.06 s to 1.40 s at sf0.1/local[32]).
-    // Thread-local state (job descriptions) is not shared — harmless here.
+    // The warm job runs under its own job tag, so a drift failure cancels
+    // it (below) instead of waiting for a full-input scan to finish.
     // Without drift there is no in-validate job to overlap with, so stay
     // fully lazy rather than force an extra eager action.
-    val violationsWarm: Option[(Thread, java.util.concurrent.atomic.AtomicReference[Throwable])] =
+    val violationsWarm =
       if (!config.driftEnabled) None
-      else {
-        val err = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-        val t = new Thread(() => try { violations.count(); () } catch {
-          case e: Throwable => err.set(e)
-        })
-        t.setDaemon(true)
-        t.start()
-        Some((t, err))
-      }
+      else Some(TaggedJobs.start(spark.sparkContext, "violation evaluation") {
+        violations.count(); ()
+      })
 
     // --- constraint verdicts: (partition × check) grid, zero-fill, pass/fail.
     // ONE aggregation over the cached violations covers both scopes (the
@@ -211,12 +207,10 @@ object Validator {
         col("n_violations"))
 
     // --- drift verdicts (driver-side over O(#partitions) profiles).
-    // try/finally around the drift block: the overlapped violations thread
-    // must be joined on EVERY exit path — a drift-scorer or collect failure
-    // propagating while the warm job still scans would leave a concurrent
-    // full-input job running behind the caller's back (and a retry would
-    // race it). The join blocks until that job completes or fails; its own
-    // failure is surfaced by the success-path check below.
+    // A drift-scorer or collect failure must not leave the warm job
+    // scanning behind the caller's back (a retry would race it): it is
+    // cancelled and joined, and the pass's caches released, before the
+    // failure propagates.
     val driftVerdicts: DataFrame = try {
       if (!config.driftEnabled) spark.emptyDataset[VerdictRow].toDF()
       else {
@@ -329,17 +323,17 @@ object Validator {
         rows.toDF()
       }
 
-    } finally violationsWarm.foreach(_._1.join())
-
-    // the warm job is joined by now (every path); surface its own failure
-    // with its cause instead of a later half-cached mystery at the caller's
-    // first violations consumer.
-    violationsWarm.foreach { case (_, err) =>
-      Option(err.get()).foreach { e =>
-        throw new RuntimeException(
-          s"violation evaluation failed: ${e.getClass.getSimpleName}: ${e.getMessage}", e)
-      }
+    } catch {
+      case e: Throwable =>
+        violationsWarm.foreach(_.cancelAndJoin())
+        stats.unpersist()
+        violations.unpersist()
+        throw e
     }
+
+    // surface the warm job's own failure with its cause instead of a later
+    // half-cached mystery at the caller's first violations consumer
+    violationsWarm.foreach(_.await())
 
     // no global orderBy here: verdict order is presentation, not semantics —
     // consumers that need one sort the (tiny) frame themselves
@@ -445,35 +439,75 @@ object Validator {
   /** Commit a pass's three output tables with partition-atomic semantics —
     * THE one copy of the commit protocol (shared by the ledger path and
     * the manifest-mode CLI path, so the `<global>` sentinel convention and
-    * per-table computed sets cannot drift between them).
+    * per-table computed sets cannot drift between them). Returns the
+    * verdict rows it wrote.
     *
     * `computed`: partitions this run evaluated; computed-but-empty ones
     * have their stale outputs deleted. "<global>" is appended for the two
     * tables that carry cross-partition rows (violations, verdicts) — never
     * for column_stats, which is strictly per-partition.
     *
-    * W1 (ingest sort, collect/handler.go:75-77): violation rows are
-    * ordered within each write task — deterministic file contents + better
-    * parquet RLE/dict compression on url/check_name at scale. Stats rows
-    * are the ledger's metrics side (SURVEY §1.4 column_stats): mergeable
-    * HLL/KLL sketches a resumed or later run can roll up to table level
-    * without touching the data.
+    * The three writes are independent and run concurrently, one driver
+    * thread and one job tag each ([[TaggedJobs.runAll]]): the first failure
+    * cancels the other two and propagates before any caller marks a
+    * partition done. Each partition value lands in one file per table
+    * (unless AQE splits a skewed violations partition):
+    *   - violations are rebalanced by partition, then ordered within each
+    *     write task (W1, ingest sort, collect/handler.go:75-77) —
+    *     deterministic file contents + better parquet RLE/dict compression
+    *     on url/check_name at scale;
+    *   - verdicts are materialized once on the driver: O(#partitions ×
+    *     #checks) rows, the order the ledger marks already hold there, so
+    *     the caller reads its per-partition counts off them without another
+    *     job;
+    *   - stats rows come out of their groupBy one partition per task. They
+    *     are the ledger's metrics side (SURVEY §1.4 column_stats):
+    *     mergeable HLL/KLL sketches a resumed or later run can roll up to
+    *     table level without touching the data.
     */
   private[graft] def commitResults(
-      res: Result, outDir: String, computed: Seq[String]): Unit = {
-    TableIO.writePartitionsAtomic(
-      res.violations
-        .sortWithinPartitions(col("partition"), col("check_name"), col("url")),
-      s"$outDir/violations", computed = Some(computed :+ "<global>"))
-    TableIO.writePartitionsAtomic(res.verdicts, s"$outDir/verdicts",
-      computed = Some(computed :+ "<global>"))
-    TableIO.writePartitionsAtomic(res.stats, s"$outDir/column_stats",
-      computed = Some(computed))
+      res: Result, outDir: String, computed: Seq[String]): Seq[Row] = {
+    val spark = res.stats.sparkSession
+    val withGlobal = Some(computed :+ "<global>")
+    def write(df: DataFrame, table: String, parts: Option[Seq[String]]) =
+      TableIO.writePartitionsAtomic(df, s"$outDir/$table", computed = parts)
+    TaggedJobs.runAll(spark.sparkContext, Seq[(String, () => Seq[Row])](
+      "violations commit" -> { () =>
+        write(res.violations.hint("rebalance", col("partition"))
+          .sortWithinPartitions(col("partition"), col("check_name"), col("url")),
+          "violations", withGlobal)
+        Seq.empty
+      },
+      "verdicts commit" -> { () =>
+        val rows = res.verdicts.collect().toSeq
+        write(onePartitionPerTask(spark, rows, res.verdicts.schema),
+          "verdicts", withGlobal)
+        rows
+      },
+      "column_stats commit" -> { () =>
+        write(res.stats, "column_stats", Some(computed))
+        Seq.empty
+      }))(1)
   }
 
-  /** Ledger-gated run: skip partitions already `done`, mark `pending` before
-    * the pass, `done` after outputs are written (ST9/S13 semantics). Returns
-    * the partitions actually processed this run.
+  /** Driver-side rows as a frame in which every `partition` value sits in
+    * exactly one task, so a partitioned write leaves one file per partition
+    * directory.
+    */
+  private def onePartitionPerTask(
+      spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    val groups = rows.groupBy(_.getAs[String]("partition")).values.toSeq
+    val sc = spark.sparkContext
+    val slices = math.max(1, math.min(groups.size, sc.defaultParallelism))
+    spark.createDataFrame(sc.parallelize(groups, slices).flatMap(identity), schema)
+  }
+
+  /** Ledger-gated run: skip partitions already `done`, run the pass, mark
+    * the processed partitions `pending` before the first output write and
+    * `done` after all outputs are written (ST9/S13 semantics). A crash
+    * before the pending marks leaves those partitions without a `done`
+    * mark too, so either way the next call re-runs them. Returns the
+    * partitions actually processed this run.
     */
   def runWithLedger(
       wpRaw: DataFrame,
@@ -486,13 +520,20 @@ object Validator {
     val wp = normalizePartitionKey(wpRaw)
     val spark = wp.sparkSession
     import spark.implicits._
-    val allParts = wp.select(col("partition")).distinct()
-      .as[String].collect().toSeq.sorted
     val done = ledger.donePartitions()
-    val todo = allParts.filterNot(done)
-    if (todo.isEmpty) return Seq.empty
-
-    todo.foreach(p => ledger.markPending(p, runId))
+    // A fresh ledger runs every input partition: the pass's own stats rows
+    // name them afterwards, so no pre-scan of the partition column. With
+    // done partitions the input list is needed up front — the pending ones
+    // scope the pass, and the done ones present in the input form the
+    // drift peer pool below.
+    val resumed: Option[(Seq[String], Seq[String])] =
+      if (done.isEmpty) None
+      else {
+        val (doneParts, todo) = wp.select(col("partition")).distinct()
+          .as[String].collect().toSeq.sorted.partition(done)
+        if (todo.isEmpty) return Seq.empty
+        Some((todo, doneParts))
+      }
     // Partition pruning: one pass over only the pending partitions (S5) —
     // EXCEPT global-scoped checks (cross-partition uniqueness), which run
     // over the full frame: a global property computed on the pending subset
@@ -508,28 +549,32 @@ object Validator {
     // literal per partition becomes a multi-megabyte plan tree that the
     // optimizer itself chokes on. The semi-join keeps the plan O(1) in
     // partition count; at day scale the broadcast is a few KB either way.
-    val scoped = scopeToPartitions(wp, todo)
+    val scoped = resumed.fold(wp) { case (todo, _) => scopeToPartitions(wp, todo) }
     // Done partitions' persisted stats rows rejoin the drift baseline pool:
     // without them a resumed partition would be scored leave-one-out against
     // the PENDING SUBSET's peers only — different verdicts than an unresumed
     // run (observed: a drift failure silently vanishing on resume). Reading
     // column_stats back costs one tiny metadata-scale scan, not an input
     // rescan — this is precisely what the mergeable stats rows are for.
-    val donePeerStats: Option[DataFrame] = {
-      val doneSeq = allParts.filter(done)
+    val donePeerStats: Option[DataFrame] = resumed.flatMap { case (_, doneParts) =>
       val statsPath = new org.apache.hadoop.fs.Path(s"$outDir/column_stats")
       val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (doneSeq.isEmpty || !fs.exists(statsPath)) None
+      if (doneParts.isEmpty || !fs.exists(statsPath)) None
       // readTable, not read.parquet: under the manifest commit mode the
       // data lives in dot-hidden snapshot dirs a plain read cannot see —
       // a plain read here would silently return an EMPTY peer pool and
       // resumed drift verdicts would diverge from unresumed runs
       else Some(scopeToPartitions(
-        TableIO.readTable(spark, statsPath.toString), doneSeq))
+        TableIO.readTable(spark, statsPath.toString), doneParts))
     }
     val res = validate(scoped, config, baselineProfiles, globalFrame = Some(wp),
       baselinePeerStats = donePeerStats)
     try {
+      val rowCnt = res.stats.select(col("partition"), col("row_cnt"))
+        .as[(String, Long)].collect().toMap
+      val todo = resumed.fold(rowCnt.keys.toSeq.sorted)(_._1)
+      if (todo.isEmpty) return Seq.empty
+      todo.foreach(p => ledger.markPending(p, runId))
       // Resume-safe, partition-ATOMIC commit (TableIO — the Parquet stand-in
       // for an Iceberg snapshot commit): a resumed run stages its output and
       // atomically swaps in ONLY the partitions it actually processed — prior
@@ -546,16 +591,20 @@ object Validator {
       // disappeared has its stale directory deleted instead of silently
       // surviving the swap. Replay of a `pending` partition is idempotent
       // because all row content is deterministic (no uuid/now()).
-
-      commitResults(res, outDir, todo)
-
-      val counts = res.violations
-        .groupBy(col("partition")).agg(count(lit(1)).as("n"))
-        .as[(String, Long)].collect().toMap
-      val rows = res.stats.select(col("partition"), col("row_cnt"))
-        .as[(String, Long)].collect().toMap
+      val verdicts = commitResults(res, outDir, todo)
+      // a partition's violation count is the sum of its constraint-check
+      // verdicts' counts (drift verdicts are not violation rows); keyed by
+      // (partition, check) first so a check listed twice counts once per
+      // violation row, exactly as its rows do
+      val checkNames = config.checks.map(_.name).toSet
+      val nViolations = verdicts
+        .filter(r => checkNames(r.getAs[String]("check_name")))
+        .map(r => (r.getAs[String]("partition"), r.getAs[String]("check_name")) ->
+          r.getAs[Long]("n_violations"))
+        .toMap
+        .groupMapReduce(_._1._1)(_._2)(_ + _)
       todo.foreach { p =>
-        ledger.markDone(p, rows.getOrElse(p, 0L), counts.getOrElse(p, 0L), runId)
+        ledger.markDone(p, rowCnt.getOrElse(p, 0L), nViolations.getOrElse(p, 0L), runId)
       }
       todo
     } finally res.unpersist()

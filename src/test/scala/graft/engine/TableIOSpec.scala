@@ -288,6 +288,30 @@ class TableIOSpec extends SparkSpec {
     }
   }
 
+  test("manifest mode: a 64 KB escaped schema string parses on a 256 KB stack") {
+    withManifestMode() {
+      val t = table()
+      val wide = spark.range(1).select(lit("a").as("partition") +:
+        (0 until 700).map(i => lit("x").as(f"a_column_with_a_rather_long_name_$i%04d")): _*)
+      TableIO.writePartitionsAtomic(wide, t)
+      val manifest = listNames(Paths.get(t)).filter(_.startsWith("_manifest-")).toSeq
+      assert(manifest.size == 1, manifest)
+      val json = new String(Files.readAllBytes(Paths.get(t, manifest.head)), "UTF-8")
+      assert(json.length >= 64 * 1024, json.length)
+      // a backtracking regex recurses once per character and overflows
+      var parsed: Either[Throwable, (Option[org.apache.spark.sql.types.StructType],
+        Map[String, String])] = null
+      val small = new Thread(null, () => parsed =
+        try Right((TableIO.parseSchema(json), TableIO.parseEntries(json)))
+        catch { case e: Throwable => Left(e) }, "small-stack", 256L * 1024)
+      small.start()
+      small.join()
+      val (schema, entries) = parsed.fold(e => fail(s"parse failed: $e"), identity)
+      assert(schema.contains(wide.schema))
+      assert(entries.keySet == Set("a") && entries("a").startsWith(".snap-"), entries)
+    }
+  }
+
   test("mode-switch guards: manifest-over-rename and rename-over-manifest both fail loudly") {
     // manifest commit into a rename-layout table would hide every existing
     // partition (prior = empty) while the ledger still says done

@@ -1,7 +1,12 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,6 +18,7 @@ import graft.fixtures.WebGen
 class ValidatorSpec extends SparkSpec {
 
   import spark.implicits._
+  import ValidatorSpec._
 
   private val N = 12000L // ≈ 5+ days at 37s spacing
 
@@ -322,5 +328,221 @@ class ValidatorSpec extends SparkSpec {
     assert(e.getMessage.contains("drift scorer failed"), e.getMessage)
     assert(e.getCause.isInstanceOf[IllegalStateException] &&
       e.getCause.getMessage == "scorer exploded", String.valueOf(e.getCause))
+  }
+
+  private def partitionsOf(wp: DataFrame): Seq[String] =
+    wp.select("partition").distinct().as[String].collect().toSeq.sorted
+
+  private val boom = new Drift.Scorer {
+    val name = "drift_boom"
+    def score(current: Array[Double],
+        baseline: IndexedSeq[Array[Double]]): Drift.DriftVerdict =
+      throw new IllegalStateException("scorer exploded")
+  }
+
+  /** (tags, succeeded) of every Spark job `body` started, in start order. */
+  private def jobsDuring[A](body: => A): (A, Seq[(String, Boolean)]) = {
+    val sc = spark.sparkContext
+    val tags = new ConcurrentHashMap[Int, String]()
+    val succeeded = new ConcurrentHashMap[Int, Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags"))).getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        succeeded.put(e.jobId, e.jobResult == JobSucceeded)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      // a marker job's end arrives after every earlier event on the bus
+      val marker = s"marker-${java.util.UUID.randomUUID()}"
+      sc.addJobTag(marker)
+      try spark.range(1).count() finally sc.removeJobTag(marker)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def markerEnded = tags.asScala.exists { case (j, t) =>
+        t.contains(marker) && succeeded.containsKey(j) }
+      while (!markerEnded && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerEnded, "listener bus did not drain")
+      (out, tags.asScala.toSeq.sortBy(_._1).collect {
+        case (j, t) if !t.contains(marker) => (t, succeeded.getOrDefault(j, false))
+      })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("a throwing drift scorer cancels the overlapped violations job") {
+    // the global uniqueness branch reads `url` through a UDF that stalls
+    // one task until it is killed: only a cancel ends the warm job early
+    val wp = WebGen.generate(spark, 800L).withColumnRenamed("p_day", "partition")
+    val victim = wp.select("url").as[String].head()
+    val stalled = wp.withColumn("url", stallOn(victim)(col("url")))
+    val t0 = System.nanoTime()
+    val (e, jobs) = jobsDuring(intercept[RuntimeException] {
+      Validator.validate(wp,
+        Validator.Config(
+          checks = Seq(Constraints.NotNull("text"), Constraints.Unique("url")),
+          scorers = Some(Seq(boom))),
+        globalFrame = Some(stalled))
+    })
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("drift scorer failed"), e.getMessage)
+    assert(e.getCause.isInstanceOf[IllegalStateException] &&
+      e.getCause.getMessage == "scorer exploded", String.valueOf(e.getCause))
+    val warm = jobs.filter(_._1.contains("violation-evaluation"))
+    assert(warm.nonEmpty, s"no warm job among $jobs")
+    assert(warm.forall(!_._2), s"a warm job ran to success: $warm")
+    assert(secs < StallSeconds / 2, s"validate waited $secs s for the warm job")
+  }
+
+  test("ledger rowCnt and nViolations are stats.row_cnt and violations per partition, fresh and resumed") {
+    val wp = WebGen.generate(spark, 6000L, flags = WebGen.Flags(
+      nullText = true, badExtract = true, dupUrls = true))
+      .withColumnRenamed("p_day", "partition")
+    val cfg = Validator.Config(Validator.DefaultChecks)
+    val rows = wp.groupBy("partition").count().as[(String, Long)].collect().toMap
+    val viol = Constraints.runAll(wp, cfg.checks, Some(wp))
+      .groupBy("partition").count().as[(String, Long)].collect().toMap
+    val expected = partitionsOf(wp)
+      .map(p => (p, "done", rows(p), viol.getOrElse(p, 0L)))
+    assert(expected.exists(_._4 > 0))
+    val ledger = Ledger(Files.createTempDirectory("ledger_counts").toString)
+    val out = Files.createTempDirectory("out_counts").toString
+    def entries = ledger.all().map(e => (e.partition, e.status, e.rowCnt, e.nViolations))
+    Validator.runWithLedger(wp, ledger, "run1", out, cfg)
+    assert(entries == expected)
+    val resumed = expected.map(_._1).take(2)
+    resumed.foreach(ledger.markPending(_, "crash"))
+    assert(Validator.runWithLedger(wp, ledger, "run2", out, cfg) == resumed)
+    assert(entries == expected)
+    assert(ledger.all().filter(_.updatedRun == "run2").map(_.partition) == resumed)
+  }
+
+  test("each (table, partition) directory holds exactly one parquet file") {
+    val wp = WebGen.generate(spark, 5000L, flags = WebGen.Flags(
+      nullText = true, badExtract = true, dupUrls = true))
+      .withColumnRenamed("p_day", "partition")
+    val out = Files.createTempDirectory("out_files").toString
+    val parts = Validator.runWithLedger(wp,
+      Ledger(Files.createTempDirectory("ledger_files").toString), "r", out)
+    Seq("violations", "verdicts", "column_stats").foreach { t =>
+      val dirs = Files.list(Paths.get(out, t)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("partition=")).toSeq
+      assert(dirs.size >= parts.size, s"$t: ${dirs.size} partition dirs")
+      dirs.foreach { d =>
+        val files = Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))
+        assert(files == 1, s"$d holds $files parquet files")
+      }
+    }
+  }
+
+  test("a failing commit write cancels the other writes and leaves every partition pending") {
+    val wp = WebGen.generate(spark, 3000L).withColumnRenamed("p_day", "partition")
+    // the referential parent is read only by the violations branch, through
+    // a UDF that stalls one task until it is killed; the stats rows the
+    // ledger needs never touch it
+    val parent = spark.range(4)
+      .select(stallOn("0")(col("id").cast("string")).as("url"))
+    val cfg = Validator.Config(
+      Seq(Constraints.NotNull("text"), Constraints.Referential("url", parent, "url")),
+      driftEnabled = false)
+    val out = Files.createTempDirectory("out_fail").toString
+    // a plain file where the column_stats table goes: that write fails at once
+    Files.createFile(Paths.get(out, "column_stats"))
+    val ledger = Ledger(Files.createTempDirectory("ledger_fail").toString)
+    val t0 = System.nanoTime()
+    val (e, jobs) = jobsDuring(intercept[RuntimeException] {
+      Validator.runWithLedger(wp, ledger, "r1", out, cfg)
+    })
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.startsWith("column_stats commit failed"), e.getMessage)
+    assert(causes(e).exists(_.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException]),
+      causes(e).mkString(" <- "))
+    val others = jobs.filter(j =>
+      j._1.contains("violations-commit") || j._1.contains("verdicts-commit"))
+    assert(others.exists(!_._2), s"no other write was cancelled: $jobs")
+    assert(secs < StallSeconds / 2, s"the failure waited $secs s for the other writes")
+    assert(ledger.all().map(e => (e.partition, e.status)) ==
+      partitionsOf(wp).map(_ -> "pending"))
+  }
+
+  test("a crash inside validate or between the pending marks and the commit re-runs those partitions") {
+    val wp = WebGen.generate(spark, 3000L).withColumnRenamed("p_day", "partition")
+    val parts = partitionsOf(wp)
+    val cfg = Validator.Config(Seq(Constraints.NotNull("text")))
+    val crashing = cfg.copy(scorers = Some(Seq(boom)))
+
+    // inside validate(), fresh ledger: nothing is marked, so all re-run
+    val l1 = Ledger(Files.createTempDirectory("ledger_crash1").toString)
+    val out1 = Files.createTempDirectory("out_crash1").toString
+    intercept[RuntimeException](Validator.runWithLedger(wp, l1, "r1", out1, crashing))
+    assert(l1.all().isEmpty)
+    assert(Validator.runWithLedger(wp, l1, "r2", out1, cfg) == parts)
+    // inside validate(), resume: the pending partition stays pending
+    l1.markPending(parts.last, "crash")
+    intercept[RuntimeException](Validator.runWithLedger(wp, l1, "r3", out1, crashing))
+    assert(l1.read(parts.last).map(_.status).contains("pending"))
+    assert(Validator.runWithLedger(wp, l1, "r4", out1, cfg) == Seq(parts.last))
+
+    // between the pending marks and the commit
+    val l2 = Ledger(Files.createTempDirectory("ledger_crash2").toString)
+    val crashAfterMarks = new Ledger {
+      def write(e: Ledger.Entry): Unit = {
+        l2.write(e)
+        if (e.status == "pending" && e.partition == parts.last)
+          throw new IllegalStateException("crash after the pending marks")
+      }
+      def read(partition: String): Option[Ledger.Entry] = l2.read(partition)
+      def all(): Seq[Ledger.Entry] = l2.all()
+    }
+    val out2 = Files.createTempDirectory("out_crash2").toString
+    intercept[IllegalStateException](
+      Validator.runWithLedger(wp, crashAfterMarks, "r1", out2, cfg))
+    assert(l2.all().map(e => (e.partition, e.status)) == parts.map(_ -> "pending"))
+    assert(!Files.exists(Paths.get(out2, "verdicts")), "the commit ran")
+    assert(Validator.runWithLedger(wp, l2, "r2", out2, cfg) == parts)
+    assert(l2.donePartitions() == parts.toSet)
+  }
+
+  test("manifest mode: verdicts read back at session defaults after a resume") {
+    // a resume leaves two snapshots; one's live dirs are all dates, the
+    // other's include "<global>" (Unique + dup urls). Typed per snapshot,
+    // `partition` reads as DATE in the first and the union fails to cast.
+    spark.conf.set(TableIO.CommitModeConf, "manifest")
+    try {
+      val wp = WebGen.generate(spark, 6000L, flags = WebGen.Flags(dupUrls = true))
+        .withColumnRenamed("p_day", "partition")
+      val parts = partitionsOf(wp)
+      val cfg = Validator.Config(Seq(Constraints.Unique("url"), Constraints.NotNull("text")))
+      val ledger = Ledger(Files.createTempDirectory("ledger_mread").toString)
+      val out = Files.createTempDirectory("out_mread").toString
+      Validator.runWithLedger(wp, ledger, "run1", out, cfg)
+      ledger.markPending(parts.head, "crash")
+      assert(Validator.runWithLedger(wp, ledger, "run2", out, cfg) == Seq(parts.head))
+      val verdicts = TableIO.readTable(spark, s"$out/verdicts")
+      assert(verdicts.schema("partition").dataType == org.apache.spark.sql.types.StringType)
+      val read = verdicts.select("partition").distinct().as[String].collect().toSet
+      assert(read == parts.toSet + "<global>")
+    } finally spark.conf.unset(TableIO.CommitModeConf)
+  }
+}
+
+object ValidatorSpec {
+  /** How long [[stallOn]] stalls a task that is never killed. */
+  val StallSeconds = 60
+
+  /** Identity on strings; on `victim` it stalls its task until the task is
+    * killed. One stalled task leaves the other task slots to other jobs.
+    */
+  def stallOn(victim: String) = udf { (s: String) =>
+    if (s == victim) {
+      val task = org.apache.spark.TaskContext.get()
+      val deadline = System.nanoTime() + StallSeconds * 1000000000L
+      while (!task.isInterrupted() && System.nanoTime() < deadline) Thread.sleep(10)
+    }
+    s
   }
 }
