@@ -252,14 +252,12 @@ object Main {
         val cfg = graft.operators.Curate.Config(
           nearDupJaccard = nearDup,
           maxSurprisal = maxSurprisal,
-          broadcastVocab = onOff("broadcast-vocab", default = true),
           blocklist = opts.get("blocklist")
             .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
             .getOrElse(Nil),
           dropNoindexPages = onOff("noindex", default = true),
           unicodeNfc = onOff("unicode-nfc", default = false),
           stripBoilerplateMinDocs = stripMinDocs,
-          broadcastBoilerplate = onOff("broadcast-boilerplate", default = true),
           c4 = onOff("c4", default = true),
           gopher = onOff("gopher", default = true),
           paragraphDedup = onOff("paragraph-dedup", default = true),
@@ -499,9 +497,8 @@ object Main {
     "validate" -> Set("ledger", "run", "partition-col", "baseline"),
     "save-baseline" -> Set("partition-col", "append-policy"),
     "curate" -> Set("blocklist", "noindex", "unicode-nfc",
-      "strip-boilerplate-min-docs", "broadcast-boilerplate", "c4", "gopher",
-      "paragraph-dedup",
-      "exact-dedup", "max-surprisal", "broadcast-vocab", "near-dup-jaccard",
+      "strip-boilerplate-min-docs", "c4", "gopher", "paragraph-dedup",
+      "exact-dedup", "max-surprisal", "near-dup-jaccard",
       "max-per-host", "quality-sample", "redact-pii", "stage-counts", "salt"),
     "ingest" -> Set("checkpoint", "baseline", "alert-endpoint",
       "max-files-per-trigger", "cross-batch-unique", "baseline-refresh"),
@@ -549,19 +546,11 @@ object Main {
       |  graft.Main curate <inputPath> <outDir> [--blocklist d1,d2,...]
       |      [--noindex on|off] [--unicode-nfc on|off]
       |      [--strip-boilerplate-min-docs <n>] [--c4 on|off] [--gopher on|off]
-      |      [--broadcast-boilerplate on|off]  (strip stage: off routes the
-      |                                  frequent-line anti join as a shuffle —
-      |                                  required when the frequent-line set
-      |                                  exceeds broadcast limits, i.e. web scale)
       |      [--paragraph-dedup on|off] [--exact-dedup on|off]
       |      [--max-surprisal <0|x>]    (drop docs whose mean -ln p(word) under
       |                                  the corpus's own unigram distribution
       |                                  exceeds x — CCNet-style LM filtering
       |                                  with no external model)
-      |      [--broadcast-vocab on|off]  (surprisal stage: off routes the vocab
-      |                                  join as a shuffle join — required when
-      |                                  the distinct-token table exceeds
-      |                                  broadcast limits, i.e. web scale)
       |      [--near-dup-jaccard <0|0..1>]  (MinHash+LSH near-dup resolution:
       |                                  keep one doc per near-dup component)
       |      [--max-per-host <k>] [--quality-sample on|off]

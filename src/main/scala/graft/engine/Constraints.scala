@@ -95,44 +95,12 @@ object Constraints {
     * key to one row per map task before the exchange), so no salt is needed
     * here — see [[SaltedJoin.dupGroups]]; salting remains on the join-shaped
     * referential check.
-    *
-    * `guardBroadcast` / `maxBroadcastDupKeys` plumb through to
-    * [[SaltedJoin.dupGroups]]'s driver-OOM guard: the duplicate-hash
-    * set is broadcast back over the key scan, which is only safe while
-    * duplicates are rare (the validation contract). On an UNTRUSTED input
-    * that may be mostly duplicates, enable the guard — per check instance,
-    * or fleet-wide via the Spark confs `spark.graft.unique.guardBroadcast`
-    * and `spark.graft.unique.maxBroadcastDupKeys` (so the default
-    * [[Validator.DefaultChecks]] suite can be hardened without code
-    * changes). Above the cap the plan degrades to a shuffle join instead of
-    * OOMing the driver.
     */
-  final case class Unique(
-      column: String,
-      guardBroadcast: Boolean = false,
-      maxBroadcastDupKeys: Long = 4000000L) extends Check {
+  final case class Unique(column: String) extends Check {
     val name = s"unique_$column"
     override def globalScope: Boolean = true // duplicates may span partitions
     def violations(df: DataFrame): DataFrame = {
-      val conf = df.sparkSession.conf
-      // fail with the conf KEY in the message — a bare NumberFormatException
-      // from deep inside a validation pass is undebuggable at 3am
-      def parsed[T](key: String, default: String, parse: String => T,
-          expect: String): T = {
-        val v = conf.get(key, default)
-        try parse(v)
-        catch {
-          case scala.util.control.NonFatal(_) => throw new IllegalArgumentException(
-            s"invalid value '$v' for Spark conf $key (expected $expect)")
-        }
-      }
-      val guard = guardBroadcast || parsed(
-        "spark.graft.unique.guardBroadcast", "false", _.toBoolean, "true|false")
-      val cap = parsed("spark.graft.unique.maxBroadcastDupKeys",
-        maxBroadcastDupKeys.toString, _.toLong, "a long count")
-      val dups = SaltedJoin.dupGroups(
-        df.select(col(column)), col(column),
-        guardBroadcast = guard, maxBroadcastDupKeys = cap)
+      val dups = SaltedJoin.dupGroups(df.select(col(column)), col(column))
       // one row per duplicated value; partition of the violation = "<global>"
       // (a duplicate may span partitions).
       finish(
@@ -221,8 +189,8 @@ object Constraints {
     def violations(df: DataFrame): DataFrame = {
       // Distinct child keys first: the anti join then runs over |distinct ck|
       // rows instead of |child| (often ≫ smaller — fact tables repeat their
-      // foreign keys), and the rare orphan keys broadcast back to pick up
-      // the violating child rows. The distinct ALSO kills skew — after it,
+      // foreign keys), and the rare orphan keys join back to pick up the
+      // violating child rows. The distinct ALSO kills skew — after it,
       // every key appears exactly once, so there is no hot key left for
       // salting to defuse; exploding the parent ×S salts here would just
       // multiply the dominant shuffle by S for nothing. Plain left-anti SMJ
@@ -242,9 +210,12 @@ object Constraints {
       val orphanKeys = distinctKeys
         .join(parentKeys,
           distinctKeys("ref_key") === parentKeys("__pk"), "left_anti")
-      val orphans = df.join(
-        broadcast(orphanKeys),
-        df(childKeyCol) === orphanKeys("ref_key"))
+      // The join-back carries no hint either ([[Broadcasts]] rule 1): a
+      // left-anti join never outputs more than its left side, so the
+      // orphan set's estimate is the distinct-key estimate — an upper
+      // bound. It broadcasts while that bound fits and shuffles beyond it,
+      // and the check stays lazy (no sizing job at plan time).
+      val orphans = df.join(orphanKeys, df(childKeyCol) === orphanKeys("ref_key"))
       finish(
         orphans.select(
           col("partition"),

@@ -39,40 +39,26 @@ object SaltedJoin {
     *      interleaved A/B at 8 cores. Salting remains essential for JOINS,
     *      where a hot key genuinely lands on one reducer:
     *      [[saltedAntiJoin]].)
-    *   2. broadcast the (rare, by validation contract) duplicate hashes back
+    *   2. join the (rare, by validation contract) duplicate hashes back
     *      over a key-column-only scan; exact per-key counts on that small
     *      subset both produce the violation keys and eliminate hash
-    *      collisions.
+    *      collisions. The join carries no hint ([[Broadcasts]] rule 1):
+    *      the dup-hash side is an aggregate over the key scan, so its size
+    *      estimate is an upper bound: it broadcasts while that bound fits
+    *      `spark.sql.autoBroadcastJoinThreshold` and plans a shuffle join
+    *      beyond it — no extra job, and no driver OOM however many
+    *      duplicates the input holds.
     */
-  /** `guardBroadcast`: the duplicate-hash set is broadcast back over the
-    * key scan — correct and cheapest under the validation contract
-    * (duplicates are RARE). On an untrusted input that may be mostly
-    * duplicates, set it true: stage 1 is then materialized once
-    * (localCheckpoint, blocks auto-released on GC) and counted, and above
-    * `maxBroadcastDupKeys` (8-byte keys → cap ≈ 32 MB) the plan degrades to
-    * a shuffle join instead of OOMing the driver. The guard costs one extra
-    * (tiny) job, so it is opt-in rather than taxing every contract-abiding
-    * run.
-    */
-  def dupGroups(df: DataFrame, key: Column,
-      guardBroadcast: Boolean = false,
-      maxBroadcastDupKeys: Long = 4000000L): DataFrame = {
+  def dupGroups(df: DataFrame, key: Column): DataFrame = {
     val keyed = df.select(key.as("k"))
-    val dupHashesPlan = keyed
+    val dupHashes = keyed
       .groupBy(xxhash64(col("k")).as("h"))
       .agg(count(lit(1)).as("hcnt"))
       .where(col("hcnt") > 1)
       .select(col("h"))
-    val dupSide =
-      if (!guardBroadcast) broadcast(dupHashesPlan)
-      else {
-        val dupHashes = dupHashesPlan.localCheckpoint(true)
-        if (dupHashes.count() <= maxBroadcastDupKeys) broadcast(dupHashes)
-        else dupHashes
-      }
     keyed
       .select(col("k"), xxhash64(col("k")).as("h"))
-      .join(dupSide, Seq("h"))
+      .join(dupHashes, Seq("h"))
       .groupBy(col("k"))
       .agg(count(lit(1)).as("cnt"))
       .where(col("cnt") > 1)

@@ -174,28 +174,22 @@ object Validator {
     // ONE aggregation over the cached violations covers both scopes (the
     // "<global>" rows are just another partition value of the same groupBy —
     // the former where-split ran the agg twice), and the per-scope frames are
-    // cheap filters of it. The counts side of the zero-fill join is
-    // BROADCAST — but only in drift mode: there it is O(#partitions ×
-    // #checks), the same order validate() already collects driver-side for
-    // drift profiles, so the pin adds no new scaling assumption and
-    // replaces two row-scale-independent but stage-heavy shuffle exchanges
-    // with a map-side hash join (r6: verdict agg measured 0.46 s of pure
-    // small-stage overhead on cached inputs). Without drift that
-    // justification does not hold (nothing else collects O(#partitions)),
-    // so the planner keeps its size-based choice rather than inheriting a
-    // forced broadcast a 10^7-partition table could OOM the driver with —
-    // the same hazard the broadcastVocab/broadcastBoilerplate dials guard.
+    // cheap filters of it. Neither join carries a hint ([[Broadcasts]] rule
+    // 1): the check-name grid is a driver-local frame and the counts side
+    // an aggregate over the cached violations, so both size estimates are
+    // upper bounds — they broadcast under the threshold (a map-side hash
+    // join instead of two small-stage shuffle exchanges; r6 measured the
+    // verdict agg at 0.46 s of pure stage overhead) and a 10^7-partition
+    // table plans shuffle joins instead of OOMing the driver.
     val allCounts = violations
       .groupBy(col("partition"), col("check_name"))
       .agg(count(lit(1)).as("n_violations"))
     val perPartCounts = allCounts.where(col("partition") =!= "<global>")
     val globalCounts = allCounts.where(col("partition") === "<global>")
     val checkNames = config.checks.map(_.name).toDF("check_name")
-    val grid = stats.select(col("partition")).crossJoin(broadcast(checkNames))
-    val countsSide =
-      if (config.driftEnabled) broadcast(perPartCounts) else perPartCounts
+    val grid = stats.select(col("partition")).crossJoin(checkNames)
     val constraintVerdicts = grid
-      .join(countsSide, Seq("partition", "check_name"), "left")
+      .join(perPartCounts, Seq("partition", "check_name"), "left")
       .na.fill(0L, Seq("n_violations"))
       .unionByName(globalCounts)
       .select(
@@ -422,7 +416,8 @@ object Validator {
   }
 
   /** Restrict `df` to rows whose `partition` value is in `parts` — via a
-    * broadcast LEFT SEMI join against a one-column frame, never an
+    * LEFT SEMI join against a one-column driver-local frame (unhinted,
+    * [[Broadcasts]] rule 1: it broadcasts under the threshold), never an
     * `isin(parts: _*)` literal list: the plan stays O(1) in |parts| (an
     * In-expression over 10^5 domain partitions is a multi-megabyte tree the
     * optimizer walks on every rule pass), and on physically-partitioned
@@ -433,7 +428,7 @@ object Validator {
     val spark = df.sparkSession
     import spark.implicits._
     val keys = parts.toDF("partition")
-    df.join(broadcast(keys), Seq("partition"), "left_semi")
+    df.join(keys, Seq("partition"), "left_semi")
   }
 
   /** Commit a pass's three output tables with partition-atomic semantics —
@@ -543,7 +538,7 @@ object Validator {
     // (hash-shuffled 8-byte digests) — correctness of a global invariant
     // cannot be had cheaper.
     //
-    // The scope filter is a BROADCAST SEMI-JOIN against a one-column todo
+    // The scope filter is a SEMI-JOIN against a one-column todo
     // frame, not `isin(todo: _*)`: --partition-col accepts any column, and
     // at high cardinality (domain, not day) an In-expression with one
     // literal per partition becomes a multi-megabyte plan tree that the

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Broadcasts
+
 /** Cross-document boilerplate-line removal — the CCNet/RefinedWeb cleanup
   * stage: a line that recurs (byte-identical) in at least `minDocs`
   * DISTINCT documents is template chrome (nav bars, cookie banners,
@@ -22,9 +24,11 @@ import org.apache.spark.sql.functions._
   *  3. an anti join against the frequent set. `minDocs` bounds each
   *     line's FREQUENCY, not the set's CARDINALITY: a web-scale crawl can
   *     clear the threshold with tens of millions of distinct template
-  *     lines, so the default broadcast hint is an explicit dial —
-  *     `broadcastFrequent = false` falls back to a shuffled anti join
-  *     when the frequent set may not fit a broadcast;
+  *     lines, and after the explode Spark's size estimate says nothing,
+  *     so the set is sized by [[graft.engine.Broadcasts.ifFits]] — one
+  *     materialize-and-measure job when the plan is built — and broadcast
+  *     only when it fits `spark.sql.autoBroadcastJoinThreshold`, else the
+  *     anti join shuffles on the line key;
   *  4. one `groupBy(doc)` rebuild shuffle over surviving lines
   *     (`collect_list(struct(pos, line))` + `array_sort` — per-doc state
   *     is one document's lines, never a global sort).
@@ -56,16 +60,9 @@ object Boilerplate {
     * merged text on every such row; null ids would rebuild as `""`. This
     * is the same per-document contract as every dedup/sampling operator
     * here; run the uniqueness check first if the corpus can't promise it.
-    *
-    * @param broadcastFrequent hint the frequent-line set broadcast-sized
-    *   (default). TRUE is right when boilerplate is a curated/expected
-    *   small set; at open-web scale the frequent set itself can be tens
-    *   of millions of lines — pass FALSE there and the anti join shuffles
-    *   on the line key instead of forcing a driver-side collect.
     */
   def stripFrequentLines(docs: DataFrame, idCol: String, textCol: String,
-                         minDocs: Long,
-                         broadcastFrequent: Boolean = true): DataFrame = {
+                         minDocs: Long): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val lines = docs.select(col(idCol).as("__bp_id"),
       posexplode(split(coalesce(col(textCol), lit("")), "\n", -1))
@@ -76,8 +73,7 @@ object Boilerplate {
       .agg(countDistinct(col("__bp_id")).as("__bp_ndocs"))
       .where(col("__bp_ndocs") >= minDocs)
       .select(col("__bp_line"))
-    val probe = if (broadcastFrequent) broadcast(frequent) else frequent
-    val kept = lines.join(probe, Seq("__bp_line"), "left_anti")
+    val kept = lines.join(Broadcasts.ifFits(frequent), Seq("__bp_line"), "left_anti")
     val rebuilt = kept
       .groupBy(col("__bp_id"))
       .agg(concat_ws("\n",

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Broadcasts
 import graft.functions.TextFunctions
 
 /** Corpus-level frequency statistics over web text — the "what is actually
@@ -57,13 +58,17 @@ object CorpusStats {
     *
     * Scale: the vocabulary count is one hash aggregation (map-side
     * partials absorb the Zipf head — the count of "the" leaves each task
-    * as one row); the doc↔vocab join broadcasts when the vocabulary fits
-    * (`broadcastVocab`, default) — real web vocab at 10^12 docs exceeds
-    * that, so pass false there and it runs as a shuffle join on the word
-    * key; the rebuild groupBy is the same shape as every dedup rebuild.
+    * as one row); the one-row token total joins unhinted (Spark estimates
+    * a global aggregate as one row). The vocabulary is built after an
+    * explode, where Spark's size estimate says nothing, so it is sized by
+    * [[graft.engine.Broadcasts.ifFits]] — materialized and measured once
+    * when the plan is built, which also lets the total sum the small
+    * materialized table — and the doc↔vocab join broadcasts only when it
+    * fits `spark.sql.autoBroadcastJoinThreshold`; real web vocab at 10^12
+    * docs does not, and the join then shuffles on the word key.
+    * The rebuild groupBy is the same shape as every dedup rebuild.
     */
   def unigramSurprisal(df: DataFrame, id: Column, text: Column,
-      broadcastVocab: Boolean = true,
       /** Upper bound on the words of ONE document that enter the pass —
         * vocabulary counts AND the per-doc mean (r6, guide §5): the
         * position-ordered float fold buffers O(doc words) structs in one
@@ -73,7 +78,10 @@ object CorpusStats {
         * are truncated — documented, deterministic, and far above any real
         * document at the default (2^20 ≈ 1M words ≈ 4x the longest novel);
         * the same guard protects the vocab-mining explode from a
-        * single-doc row blowup.
+        * single-doc row blowup. The truncated words also never reach the
+        * GLOBAL vocab counts and token total, so truncating one document
+        * shifts every word probability and therefore EVERY document's
+        * score, not only the truncated document's.
         */
       maxWordsPerDoc: Int = 1 << 20): DataFrame = {
     require(maxWordsPerDoc > 0, s"maxWordsPerDoc must be > 0, got $maxWordsPerDoc")
@@ -83,14 +91,14 @@ object CorpusStats {
     val w = in.select(id.as("__us_id"),
       posexplode(slice(TextFunctions.words(text), 1, maxWordsPerDoc))
         .as(Seq("__us_pos", "__us_w")))
-    val vocab = w.groupBy(col("__us_w")).agg(count(lit(1)).as("__us_cnt"))
+    val vocab = Broadcasts.ifFits(
+      w.groupBy(col("__us_w")).agg(count(lit(1)).as("__us_cnt")))
     val tot = vocab.agg(sum(col("__us_cnt")).cast("double").as("__us_total"))
-    val scored = vocab.crossJoin(broadcast(tot))
-      .select(col("__us_w"),
+    val perDoc = w.join(vocab, Seq("__us_w"))
+      .crossJoin(tot)
+      .select(col("__us_id"), col("__us_pos"),
         (-log(col("__us_cnt").cast("double") / col("__us_total")))
           .as("__us_s"))
-    val probe = if (broadcastVocab) broadcast(scored) else scored
-    val perDoc = w.join(probe, Seq("__us_w"))
       .groupBy(col("__us_id"))
       .agg(
         (aggregate(

@@ -56,7 +56,8 @@ import graft.functions.{C4Rules, TextFunctions}
   *                         survives. NOTE: component resolution is
   *                         iterative, so with this dial on, curate() runs
   *                         its label-propagation jobs when the plan is
-  *                         BUILT — the one stage that is not lazy
+  *                         BUILT (strip_boilerplate and surprisal likewise
+  *                         size their broadcast side when built)
   *  10. host_cap           at most k docs per host (md5-ranked)
   *  11. quality_sample     keep with probability qualityScore(text)
   *  12. redact_pii         row-local typed-placeholder redaction, LAST
@@ -83,17 +84,10 @@ object Curate {
       dropNoindexPages: Boolean = true,
       unicodeNfc: Boolean = false,
       stripBoilerplateMinDocs: Long = 0L, // 0 = off; 1 is rejected loudly
-      /** strip stage: hint the frequent-line set broadcast-sized. FALSE at
-        * open-web scale — the frequent set can reach tens of millions of
-        * lines, and a forced broadcast there OOMs the driver (same hazard
-        * and same dial as [[broadcastVocab]] for the surprisal stage).
-        */
-      broadcastBoilerplate: Boolean = true,
       c4: Boolean = true,
       gopher: Boolean = true,
       paragraphDedup: Boolean = true,
       maxSurprisal: Double = 0.0, // 0 = off; > 0 = drop docs above the cap
-      broadcastVocab: Boolean = true, // surprisal stage: false at web scale
       exactTextDedup: Boolean = true,
       nearDupJaccard: Double = 0.0, // 0 = off; (0,1] = MinHash+LSH threshold
       maxPerHost: Int = 0, // 0 = off
@@ -128,8 +122,7 @@ object Curate {
     if (cfg.stripBoilerplateMinDocs > 0L)
       b += ("strip_boilerplate" -> ((d: DataFrame) =>
         Boilerplate.stripFrequentLines(multiEvalGuard(d), "url", "text",
-          cfg.stripBoilerplateMinDocs,
-          broadcastFrequent = cfg.broadcastBoilerplate)))
+          cfg.stripBoilerplateMinDocs)))
     if (cfg.paragraphDedup)
       b += ("paragraph_dedup" -> ((d: DataFrame) =>
         Dedup.dedupParagraphs(multiEvalGuard(d), "url", "text")
@@ -150,12 +143,9 @@ object Curate {
       s"maxSurprisal must be a finite value >= 0, got ${cfg.maxSurprisal}")
     if (cfg.maxSurprisal > 0.0)
       b += ("surprisal" -> ((d: DataFrame) => {
-        // vocab mining + the keep-set semi join each traverse the input;
-        // broadcastVocab=false routes the vocab join as a shuffle join for
-        // corpora whose distinct-token table exceeds broadcast limits
+        // vocab mining + the keep-set semi join each traverse the input
         val in = multiEvalGuard(d)
-        val keep = CorpusStats.unigramSurprisal(in, col("url"), col("text"),
-            broadcastVocab = cfg.broadcastVocab)
+        val keep = CorpusStats.unigramSurprisal(in, col("url"), col("text"))
           .where(col("surprisal").isNotNull &&
             col("surprisal") <= cfg.maxSurprisal)
           .select(col("id").as("__cs_keep"))
@@ -201,9 +191,13 @@ object Curate {
   private def multiEvalGuard(d: DataFrame): DataFrame =
     Caching.multiEvalGuard(d)
 
-  /** The cleaned corpus as ONE lazy plan — no intermediate actions beyond
-    * the multi-eval persist hints; at full scale this is the call to use
-    * (write it, count the write).
+  /** The cleaned corpus as ONE plan — no intermediate actions beyond the
+    * multi-eval persist hints, except where a stage must size or resolve
+    * something when it is built: strip_boilerplate and surprisal each
+    * materialize and measure their join's small side once for the
+    * broadcast decision ([[graft.engine.Broadcasts.ifFits]]), and near_dup
+    * runs its label-propagation jobs. All three are off by default. At
+    * full scale this is the call to use (write it, count the write).
     */
   def curate(df: DataFrame, cfg: Config = Config()): DataFrame =
     stages(cfg).foldLeft(df) { case (d, (_, f)) => f(d) }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Broadcasts
 import graft.functions.TextFunctions
 
 /** Benchmark decontamination — the pretraining hygiene step: find corpus
@@ -18,11 +19,16 @@ import graft.functions.TextFunctions
   * engine-portable, no hashing step to diverge on.
   *
   * Scale: the benchmark side is an eval set — thousands of rows, not
-  * billions — so its exploded shingle set is BROADCAST: the corpus side is
-  * then ONE scan + a broadcast hash probe (no corpus-wide shuffle), and
-  * only the matching (corpus_id, bench_id, shingle) rows — bounded by the
-  * benchmark's size times the contamination rate — enter the
-  * count-distinct exchange. The corpus never shuffles by content.
+  * billions — but small only by contract, and after the explode Spark's
+  * size estimate says nothing, so its shingle set is sized by
+  * [[graft.engine.Broadcasts.ifFits]] (one materialize-and-measure job
+  * when the plan is built). When it fits
+  * `spark.sql.autoBroadcastJoinThreshold` the corpus side is ONE scan + a
+  * broadcast hash probe (no corpus-wide shuffle), and only the matching
+  * (corpus_id, bench_id, shingle) rows — bounded by the benchmark's size
+  * times the contamination rate — enter the count-distinct exchange; an
+  * oversized benchmark falls back to a shuffle join instead of OOMing the
+  * driver.
   */
 object Decontaminate {
 
@@ -42,7 +48,7 @@ object Decontaminate {
         explode(array_distinct(TextFunctions.shingles(benchText, shingleN)))
           .as("sh"))
     corpusTok
-      .join(broadcast(benchTok), Seq("sh"))
+      .join(Broadcasts.ifFits(benchTok), Seq("sh"))
       .groupBy(col("corpus_id"), col("bench_id"))
       // shingles are distinct per side pre-join, so each shared shingle
       // contributes exactly one row — a plain count IS the distinct count
@@ -58,14 +64,13 @@ object Decontaminate {
       bench: DataFrame, benchId: Column, benchText: Column,
       shingleN: Int = 5, minShared: Int = 3): DataFrame = {
     // flagged is bounded by |benchmark| × contamination rate — the same
-    // smallness argument as the probe side — so BROADCAST the anti join
-    // too: without the hint the post-aggregation frame has no size stats
-    // and the planner would shuffle the whole corpus by id through a
-    // SortMergeJoin. No distinct: left_anti ignores duplicate keys.
-    val flagged = contaminatedPairs(corpus, corpusId, corpusText,
-        bench, benchId, benchText, shingleN, minShared)
-      .select(col("corpus_id").as("__contaminated_id"))
-    corpus.join(broadcast(flagged),
-      corpusId === col("__contaminated_id"), "left_anti")
+    // by-contract smallness as the probe side, and after the join its size
+    // estimate is no bound at all — so it is sized the same way: measured,
+    // the anti join broadcasts it when it fits instead of shuffling the
+    // whole corpus by id. No distinct: left_anti ignores duplicate keys.
+    val flagged = Broadcasts.ifFits(contaminatedPairs(corpus, corpusId,
+        corpusText, bench, benchId, benchText, shingleN, minShared)
+      .select(col("corpus_id").as("__contaminated_id")))
+    corpus.join(flagged, corpusId === col("__contaminated_id"), "left_anti")
   }
 }

@@ -4,10 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Broadcasts
+
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Two paths (SURVEY-adjacent training-data ops):
-  *  - [[bruteTopK]]: exact cosine top-k via broadcast join — the correctness
+  *  - [[bruteTopK]]: exact cosine top-k via a join against the query set
+  *    (broadcast when it fits, [[graft.engine.Broadcasts]]) — the correctness
   *    baseline; right when the query set is small (queries × corpus scan).
   *  - [[lshTopK]]: random-hyperplane LSH buckets — the 100 TB scale path: the
   *    corpus is bucketed once (shuffle on a 32-bit bucket key), each query
@@ -85,9 +88,10 @@ object Similarity {
 
   /** Exact top-k by cosine for each query row.
     * `queries(qid, qvec)`, `corpus(cid, cvec)` → (qid, cid, sim, rank).
-    * The query side is broadcast (small by contract); the corpus is scanned
-    * once with no shuffle of the corpus itself; per-query top-k is a ranking
-    * window over (query, candidate) pairs.
+    * The query side is small by contract, so it is sized by
+    * [[graft.engine.Broadcasts.ifFits]] and broadcast when it fits: the
+    * corpus is then scanned once with no shuffle of the corpus itself;
+    * per-query top-k is a ranking window over (query, candidate) pairs.
     */
   def bruteTopK(
       queries: DataFrame, qid: Column, qvec: Column,
@@ -95,7 +99,7 @@ object Similarity {
       k: Int, excludeSelf: Boolean = true): DataFrame = {
     val q = cleanVecs(queries.select(qid.as("qid"), qvec.as("qvec")), "qvec")
     val c = cleanVecs(corpus.select(cid.as("cid"), cvec.as("cvec")), "cvec")
-    val pairs = c.join(broadcast(q),
+    val pairs = c.join(Broadcasts.ifFits(q),
       if (excludeSelf) col("qid") =!= col("cid") else lit(true))
     val scored = pairs.select(
       col("qid"), col("cid"),
@@ -246,7 +250,7 @@ object Similarity {
     val q = cleanVecs(
       queries.select(qid.as("qid"), qvec.cast("array<double>").as("qvec")), "qvec")
       .withColumn("cell", explode(probesOf(col("qvec"))))
-    val pairs = assigned.join(broadcast(q), Seq("cell"))
+    val pairs = assigned.join(Broadcasts.ifFits(q), Seq("cell"))
       .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
     val scored = pairs
       .select(col("qid"), col("cid"), cosine(col("qvec"), col("cvec")).as("sim"))
@@ -273,7 +277,7 @@ object Similarity {
     val q = cleanVecs(queries.select(qid.as("qid"), qvec.as("qvec")), "qvec")
       .withColumn("qsketch", hyperplaneSketch(col("qvec"), bits))
       .select(col("qid"), col("qvec"), explode(probes).as("bucket"))
-    val pairs = c.join(broadcast(q), Seq("bucket"))
+    val pairs = c.join(Broadcasts.ifFits(q), Seq("bucket"))
       .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
     val scored = pairs.select(
       col("qid"), col("cid"),

@@ -106,7 +106,7 @@ object StreamingValidate {
       // r6 (guide §2.3, the dupGroups idiom): the distinct below previously
       // shuffled EVERY distinct url string in the accumulated table, every
       // tick. The current batch's 64-bit url-hash set is bounded by the
-      // trigger size and broadcasts, so the history scan now forwards only
+      // trigger size, so the history scan now forwards only
       // hash-colliding CANDIDATES into the distinct exchange — per-tick
       // shuffle drops from O(history urls) to O(batch-matching candidates).
       // Semantics are exact: equal urls hash equal (no false negatives) and
@@ -114,9 +114,13 @@ object StreamingValidate {
       // equality of the left join. The scan itself remains O(history) —
       // that is the documented table-global-invariant price above; only a
       // seen-url digest sidecar removes it. Cost: one extra bounded
-      // evaluation of the batch frame to mine the hashes.
-      val batchHashes = broadcast(
-        df.select(xxhash64(col("url")).as("__sp_h")).distinct())
+      // evaluation of the batch frame to mine the hashes. The semi join
+      // carries no hint (graft.engine.Broadcasts rule 1): the hash set is an
+      // aggregate over the batch, so its estimate is an upper bound — it
+      // broadcasts under the threshold, and an unbounded first tick plans
+      // a shuffle join instead of OOMing the driver.
+      val batchHashes =
+        df.select(xxhash64(col("url")).as("__sp_h")).distinct()
       val prior = priorUrls
         .withColumn("__sp_ph", xxhash64(col("url")))
         .join(batchHashes, col("__sp_ph") === col("__sp_h"), "left_semi")

@@ -9,8 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * wrapper over `ColumnNode`; wrapping a raw `Expression` goes through
   * `classic.ExpressionUtils`, which is `private[sql]` — hence this bridge
   * lives in an `org.apache.spark.sql` subpackage (the same pattern other
-  * Spark-native libraries use). Nothing else in graft may import from
-  * Spark-private scopes.
+  * Spark-native libraries use). Nothing outside this package may import
+  * from Spark-private scopes.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

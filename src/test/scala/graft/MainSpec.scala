@@ -62,11 +62,28 @@ class MainSpec extends AnyFunSuite {
 
   test("curate declares exactly its stage dials") {
     assert(Main.commandFlags("curate") == Set("blocklist", "noindex",
-      "unicode-nfc", "strip-boilerplate-min-docs", "broadcast-boilerplate",
-      "c4", "gopher",
-      "paragraph-dedup", "exact-dedup", "max-surprisal", "broadcast-vocab",
+      "unicode-nfc", "strip-boilerplate-min-docs", "c4", "gopher",
+      "paragraph-dedup", "exact-dedup", "max-surprisal",
       "near-dup-jaccard", "max-per-host", "quality-sample", "redact-pii",
       "stage-counts", "salt"))
+  }
+
+
+  test("curate rejects the retired broadcast flags: unknown flag, exit 64") {
+    // broadcast decisions follow spark.sql.autoBroadcastJoinThreshold; the
+    // old per-stage flags must fail loudly, not fall back to a default
+    for (flag <- Seq("broadcast-vocab", "broadcast-boilerplate"))
+      assert(Main.parseArgs(Array("/in", "/out", s"--$flag", "off"),
+        Main.commandFlags("curate")) == Left(s"unknown flag: --$flag"))
+    // the CLI exits the process, so run it in a JVM of its own; the flag
+    // check fails before any Spark session starts
+    val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java")
+    val proc = new ProcessBuilder(javaBin.toString, "-cp", sys.props("java.class.path"),
+        "graft.Main", "curate", "/in", "/out", "--broadcast-vocab", "off")
+      .redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 64, out)
+    assert(out.contains("unknown flag: --broadcast-vocab"), out)
   }
 
   test("a positional equal to some flag's value is kept") {

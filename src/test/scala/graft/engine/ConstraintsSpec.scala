@@ -37,21 +37,14 @@ class ConstraintsSpec extends SparkSpec {
     assert(v.select("check_name").distinct().collect().head.getString(0) == "unique_url")
   }
 
-  test("unique guard via Spark conf: same violations, degraded-join path incl.") {
-    // spark.graft.unique.* confs plumb SaltedJoin's driver-OOM guard into
-    // the DEFAULT check suite (untrusted-input hardening without code
-    // changes); cap=1 forces the degrade-to-shuffle-join path — results
-    // must be identical to the unguarded broadcast plan
-    spark.conf.set("spark.graft.unique.guardBroadcast", "true")
-    spark.conf.set("spark.graft.unique.maxBroadcastDupKeys", "1")
-    try {
-      val v = Constraints.Unique("url")
-        .violations(frame(WebGen.Flags(dupUrls = true)))
-      assert(v.count() == (N - 1) / 97)
-    } finally {
-      spark.conf.unset("spark.graft.unique.guardBroadcast")
-      spark.conf.unset("spark.graft.unique.maxBroadcastDupKeys")
+  test("unique: dup-hash join broadcasts under the threshold, shuffles at -1, same violations") {
+    // no conf and no per-check flag decide the join: Spark's threshold
+    // does, from the dup-hash aggregate's upper-bound estimate
+    assertBroadcastBothWays("BroadcastHashJoin") {
+      Constraints.Unique("url").violations(frame(WebGen.Flags(dupUrls = true)))
     }
+    val v = Constraints.Unique("url").violations(frame(WebGen.Flags(dupUrls = true)))
+    assert(v.count() == (N - 1) / 97)
   }
 
   test("null_text: exactly ceil(n/53) not-null violations") {

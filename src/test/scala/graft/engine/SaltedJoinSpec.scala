@@ -34,19 +34,17 @@ class SaltedJoinSpec extends SparkSpec {
     assert(salted.nonEmpty) // fixture really has orphans (ck 21..36)
   }
 
-  test("guarded broadcast: identical results, degrades past the cap") {
+  test("dup groups: broadcast under the threshold, shuffle join at -1, identical results") {
     val rows = (1 to 60).flatMap(k => Seq.fill(1000 / k)((s"key$k", k.toLong)))
     val df = rows.toDF("key", "salt_src")
-    val plain = SaltedJoin.dupGroups(df, col("key"))
+    val plain = df.groupBy(col("key")).agg(count(lit(1)).as("cnt"))
+      .where(col("cnt") > 1).orderBy("key").as[(String, Long)].collect().toSeq
+    assertBroadcastBothWays("BroadcastHashJoin") {
+      SaltedJoin.dupGroups(df, col("key"))
+    }
+    val pref = SaltedJoin.dupGroups(df, col("key"))
       .orderBy("k").as[(String, Long)].collect().toSeq
-    val guarded = SaltedJoin.dupGroups(df, col("key"), guardBroadcast = true)
-      .orderBy("k").as[(String, Long)].collect().toSeq
-    assert(guarded == plain)
-    // cap of 1 forces the degraded shuffle-join path — results unchanged
-    val degraded = SaltedJoin.dupGroups(df, col("key"),
-      guardBroadcast = true, maxBroadcastDupKeys = 1L)
-      .orderBy("k").as[(String, Long)].collect().toSeq
-    assert(degraded == plain)
+    assert(pref == plain)
   }
 
   test("property: hash-prefiltered ≡ naive dup detection under seeded random duplication") {

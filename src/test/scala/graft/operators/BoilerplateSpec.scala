@@ -71,26 +71,13 @@ class BoilerplateSpec extends SparkSpec {
     assert(out == Seq("body 1\r\n\r", "body 2\r\n\r", "body 3\r\n\r"), out.toString)
   }
 
-  test("broadcastFrequent=false: the planner is free NOT to broadcast the anti join") {
-    // At toy scale Catalyst auto-broadcasts anyway; the dial's contract is
-    // the absence of the FORCED hint. Disable auto-broadcast to stand in
-    // for the planner's at-scale "too big" decision and prove the plan
-    // degrades to a shuffled anti join instead of an OOM-bound broadcast.
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1")
-      val plan = Boilerplate
-        .stripFrequentLines(docs, "doc_id", "text", 3L, broadcastFrequent = false)
-        .queryExecution.executedPlan.toString
-      val antiLines = plan.linesIterator.filter(_.contains("LeftAnti")).toSeq
-      assert(antiLines.nonEmpty && antiLines.forall(!_.contains("Broadcast")), plan)
-      // and the hinted default still broadcasts even under the same conf
-      val hinted = Boilerplate.stripFrequentLines(docs, "doc_id", "text", 3L)
-        .queryExecution.executedPlan.toString
-      assert(hinted.linesIterator.exists(l =>
-        l.contains("LeftAnti") && l.contains("Broadcast")), hinted)
-    } finally spark.conf.set(key, prev)
+  test("frequent-line anti join: broadcast under the threshold, shuffled at -1, same text") {
+    // the frequent set is built after an explode, so it is measured
+    // (checkpointed: ExistingRDD) and broadcast only when it fits; at -1
+    // the anti join shuffles on the line key instead of broadcasting
+    assertBroadcastBothWays("BroadcastHashJoin.*LeftAnti", "ExistingRDD") {
+      Boilerplate.stripFrequentLines(docs, "doc_id", "text", 3L)
+    }
   }
 
   test("plan: the frequent-line anti join broadcasts the small side") {

@@ -57,6 +57,15 @@ class CorpusStatsSpec extends SparkSpec {
     assert(r(11L).get > r(10L).get)
   }
 
+  test("unigramSurprisal: vocab and total joins broadcast under the threshold, shuffle at -1, same scores") {
+    val docs = Seq((1L, "a b a c"), (2L, "b c d"), (3L, "a")).toDF("doc_id", "text")
+    // the vocabulary is measured (checkpointed: ExistingRDD) and hash-joined,
+    // the one-row total nested-loop-joined; at -1 neither is broadcast
+    assertBroadcastBothWays("BroadcastHashJoin", "BroadcastNestedLoopJoin", "ExistingRDD") {
+      CorpusStats.unigramSurprisal(docs, col("doc_id"), col("text"))
+    }
+  }
+
   test("unigramSurprisal: maxWordsPerDoc truncates a pathological doc, bounded buffer (r6)") {
     // a 10k-word doc under a 100-word cap: only the first 100 words enter
     // the vocab AND the mean; a normal doc in the same corpus is untouched

@@ -120,11 +120,11 @@ class CurateSpec extends SparkSpec {
     val kept = Curate.curate(in, base.copy(maxSurprisal = cap))
       .select("url").as[String].collect().toSet
     assert(kept == Set("https://s.org/1", "https://s.org/2"), kept.toString)
-    // the shuffle-join vocab path (web-scale dial) selects the same docs
-    val keptShuffle = Curate.curate(in,
-        base.copy(maxSurprisal = cap, broadcastVocab = false))
-      .select("url").as[String].collect().toSet
-    assert(keptShuffle == kept)
+    // the shuffle-join vocab path (a vocabulary over the broadcast
+    // threshold, forced here with -1) selects the same docs
+    assertBroadcastBothWays("BroadcastHashJoin") {
+      Curate.curate(in, base.copy(maxSurprisal = cap)).select("url")
+    }
     intercept[IllegalArgumentException](
       Curate.stages(base.copy(maxSurprisal = -1.0)))
     intercept[IllegalArgumentException](

@@ -51,26 +51,24 @@ class DecontaminateSpec extends SparkSpec {
   }
 
   test("the benchmark side is broadcast — the corpus never shuffles for the join") {
-    // auto-broadcast disabled so ONLY the explicit hint can produce a BHJ —
-    // with the default threshold the tiny local bench side would plan as
-    // broadcast even if the hint were dropped, and this test could not fail
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
-      val plan = Decontaminate.contaminatedPairs(
-          corpus, col("doc_id"), col("text"),
-          bench, col("bench_id"), col("btext"))
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"),
-        s"benchmark probe must be a broadcast join:\n$plan")
-      val dropPlan = Decontaminate.dropContaminated(
-          corpus, col("doc_id"), col("text"),
-          bench, col("bench_id"), col("btext"))
-        .queryExecution.executedPlan.toString
-      assert(dropPlan.contains("BroadcastHashJoin") &&
-        !dropPlan.contains("SortMergeJoin"),
-        s"anti join must broadcast the flagged ids, not shuffle the corpus:\n$dropPlan")
-    } finally spark.conf.set(key, prev)
+    // both sides that are small only by contract are measured (checkpointed:
+    // ExistingRDD) and broadcast under the threshold; at -1 both joins
+    // become shuffle joins with the same results
+    assertBroadcastBothWays("BroadcastHashJoin", "ExistingRDD") {
+      Decontaminate.contaminatedPairs(
+        corpus, col("doc_id"), col("text"),
+        bench, col("bench_id"), col("btext"))
+    }
+    assertBroadcastBothWays("BroadcastHashJoin.*LeftAnti", "ExistingRDD") {
+      Decontaminate.dropContaminated(
+        corpus, col("doc_id"), col("text"),
+        bench, col("bench_id"), col("btext"))
+    }
+    val dropPlan = Decontaminate.dropContaminated(
+        corpus, col("doc_id"), col("text"),
+        bench, col("bench_id"), col("btext"))
+      .queryExecution.executedPlan.toString
+    assert(!dropPlan.contains("SortMergeJoin"),
+      s"anti join must broadcast the flagged ids, not shuffle the corpus:\n$dropPlan")
   }
 }

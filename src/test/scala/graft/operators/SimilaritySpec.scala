@@ -131,6 +131,25 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("query side: measured and broadcast under the threshold, shuffle join at -1, same top-k") {
+    // the query set is small only by contract, so each path sizes it
+    // (checkpointed: ExistingRDD); brute force is a non-equi join
+    assertBroadcastBothWays("BroadcastNestedLoopJoin", "ExistingRDD") {
+      Similarity.bruteTopK(
+        vecs, col("vec_id"), col("vec"), vecs, col("vec_id"), col("vec"), k = 2)
+    }
+    assertBroadcastBothWays("BroadcastHashJoin", "ExistingRDD") {
+      Similarity.lshTopK(
+        vecs, col("vec_id"), col("vec"), vecs, col("vec_id"), col("vec"),
+        k = 2, bits = 4)
+    }
+    assertBroadcastBothWays("BroadcastHashJoin", "ExistingRDD") {
+      Similarity.ivfTopK(
+        vecs, col("vec_id"), col("vec"), vecs, col("vec_id"), col("vec"),
+        k = 2, nCells = 2, nProbe = 2)
+    }
+  }
+
   test("LSH top-1 matches brute top-1 on well-separated fixture") {
     val brute = Similarity.bruteTopK(
       vecs, col("vec_id"), col("vec"), vecs, col("vec_id"), col("vec"), k = 1)

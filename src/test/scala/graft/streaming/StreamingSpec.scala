@@ -258,6 +258,25 @@ class StreamingSpec extends SparkSpec {
       plan.take(2000))
   }
 
+  test("cross-batch flag: semi join broadcasts under the threshold, shuffles at -1, same flags") {
+    import java.nio.file.Files
+    val out = Files.createTempDirectory("recon_both").toString
+    def page(u: String) = (u, ts("2025-07-01 00:00:01"), "<p>1</p>".getBytes("UTF-8"), "doc", "en")
+    Seq(page("https://x/1"), page("https://x/2")).toDF("url", "warc_ts", "html", "text", "lang")
+      .withColumn("partition", lit("2025-07-01"))
+      .withColumn("lineage", lit("q1")).withColumn("ingest_batch", lit(0L))
+      .write.partitionBy("lineage", "ingest_batch").parquet(s"$out/pages")
+    val batch = Seq(page("https://x/2"), page("https://x/3"))
+      .toDF("url", "warc_ts", "html", "text", "lang")
+    val seenFlag = graft.engine.Constraints.SeenPriorBatch.flagColumn
+    def flagged = StreamingValidate.withSeenPriorFlag(batch, out, "q1", 1L)
+      .select(col("url"), col(seenFlag))
+    // a url landed by an earlier tick is flagged whichever join runs
+    assertBroadcastBothWays("BroadcastHashJoin.*LeftSemi")(flagged)
+    val flags = flagged.as[(String, Boolean)].collect().toMap
+    assert(flags == Map("https://x/2" -> true, "https://x/3" -> false), flags.toString)
+  }
+
   test("sink replay of the same micro-batch is idempotent (ST9 exactly-once)") {
     import java.nio.file.Files
     val out = Files.createTempDirectory("sink_replay").toString
