@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Ledger, Validator, WebSchema}
+import graft.operators.Curate
 
 /** spark-submit entry point:
   *
@@ -17,7 +18,9 @@ import graft.engine.{Ledger, Validator, WebSchema}
   * → drift) over an `input_hint`-shaped table, writing violations, verdicts
   * and column_stats under <outDir>. With --ledger, completed partitions are
   * skipped on re-run (resume). Exit code 1 when any verdict failed, 2 on
-  * schema mismatch — usable as a data-quality gate in a pipeline.
+  * schema mismatch — usable as a data-quality gate in a pipeline. Usage
+  * errors exit 64 from [[parse]], before a SparkSession starts, so they take
+  * precedence over data errors.
   *
   * No master/config is forced here: spark-submit supplies them (cluster
   * deploys set executors/shuffle partitions per cluster size).
@@ -25,21 +28,9 @@ import graft.engine.{Ledger, Validator, WebSchema}
 object Main {
 
   def main(args: Array[String]): Unit = {
-    if (args.length < 2) { System.err.println(usage); sys.exit(64) }
-    val cmd = args(0)
-    if (!commandFlags.contains(cmd)) {
-      System.err.println(s"unknown command: $cmd\n$usage")
-      sys.exit(64)
-    }
-    // Strict flag hygiene: a typo'd flag name or a flag with no value must
-    // fail loudly, not silently fall back to defaults (e.g. an ignored
-    // --append-policy would pollute the baseline with the very rows strict
-    // mode exists to exclude). Flags are validated PER COMMAND: a flag that
-    // exists but belongs to a different command (--append-policy on
-    // validate) is exactly such a silently-ignored default in disguise.
-    val (positional, opts) = parseArgs(args.drop(1), commandFlags(cmd)) match {
+    val command = parse(args) match {
       case Left(err) =>
-        System.err.println(s"$err\n$usage")
+        System.err.println(err)
         sys.exit(64)
         throw new IllegalStateException
       case Right(parsed) => parsed
@@ -55,26 +46,7 @@ object Main {
       else builder.master("local[*]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val partitionCol = opts.getOrElse("partition-col", "")
-
-    // `validate` addresses its tables as PATHS under <outDir> and routes
-    // writes/reads through TableIO; commitMode=iceberg addresses catalog
-    // identifiers — mixing them would write through the Iceberg committer
-    // but read nothing back (or silently bypass the configured committer on
-    // the raw-overwrite branch). `ingest` is untouched: its sink writes
-    // plain path parquet and never consults the committer, so a fleet-wide
-    // iceberg conf must not break the daily tick. `vacuum` accepts an
-    // identifier and dispatches correctly.
-    if (cmd == "validate" &&
-        spark.conf.get(graft.engine.TableIO.CommitModeConf, "rename") == "iceberg") {
-      System.err.println("[sodspark] commitMode=iceberg is not supported by " +
-        "the outDir/path-based validate flow; use rename or manifest here, " +
-        "or drive Iceberg tables through the TableCommitter API with " +
-        "catalog identifiers")
-      sys.exit(64)
-    }
-
-    def load(path: String) = {
+    def load(path: String, partitionCol: String) = {
       val raw = spark.read.parquet(path)
       WebSchema.validate(raw) match {
         case Left(err) =>
@@ -97,15 +69,29 @@ object Main {
       }
     }
 
-    cmd match {
-      case "validate" =>
-        val Seq(in, out) = requirePositionals(positional, 2)
-        val wp = load(in)
-        val baseline = opts.get("baseline")
+    command match {
+      case ValidateCmd(in, out, ledger, run, partitionCol, baselineDir) =>
+        // `validate` addresses its tables as PATHS under <outDir> and routes
+        // writes/reads through TableIO; commitMode=iceberg addresses catalog
+        // identifiers — mixing them would write through the Iceberg committer
+        // but read nothing back (or silently bypass the configured committer on
+        // the raw-overwrite branch). `ingest` is untouched: its sink writes
+        // plain path parquet and never consults the committer, so a fleet-wide
+        // iceberg conf must not break the daily tick. `vacuum` accepts an
+        // identifier and dispatches correctly.
+        if (spark.conf.get(graft.engine.TableIO.CommitModeConf, "rename") == "iceberg") {
+          System.err.println("[sodspark] commitMode=iceberg is not supported by " +
+            "the outDir/path-based validate flow; use rename or manifest here, " +
+            "or drive Iceberg tables through the TableCommitter API with " +
+            "catalog identifiers")
+          sys.exit(64)
+        }
+        val wp = load(in, partitionCol)
+        val baseline = baselineDir
           .map(Validator.loadBaseline(spark, _)).getOrElse(Map.empty)
-        val failed: Long = opts.get("ledger") match {
+        val failed: Long = ledger match {
           case Some(ledgerDir) =>
-            val runId = opts.getOrElse("run", "run-" + java.util.UUID.randomUUID())
+            val runId = run.getOrElse("run-" + java.util.UUID.randomUUID())
             val processed = Validator.runWithLedger(
               wp, Ledger(ledgerDir), runId, out, baselineProfiles = baseline)
             println(s"[sodspark] processed partitions: ${processed.size}")
@@ -165,27 +151,20 @@ object Main {
         spark.stop()
         sys.exit(if (failed > 0) 1 else 0)
 
-      case "save-baseline" =>
-        val Seq(in, out) = requirePositionals(positional, 2)
+      case SaveBaselineCmd(in, out, partitionCol, strict) =>
         // ST5 append policy (reference allowAppendOutlier=false analog):
         // --append-policy strict keeps violating rows OUT of the model
-        opts.get("append-policy") match {
-          case Some("strict") =>
-            val rowChecks = Validator.DefaultChecks
-              .collect { case c: graft.engine.Constraints.RowCheck => c }
-            Validator.saveBaseline(load(in), out, rowChecks)
-          case Some(other) if other != "all" =>
-            System.err.println(s"unknown --append-policy: $other (strict|all)")
-            sys.exit(64)
-          case _ => Validator.saveBaseline(load(in), out)
-        }
+        if (strict) {
+          val rowChecks = Validator.DefaultChecks
+            .collect { case c: graft.engine.Constraints.RowCheck => c }
+          Validator.saveBaseline(load(in, partitionCol), out, rowChecks)
+        } else Validator.saveBaseline(load(in, partitionCol), out)
         println(s"[sodspark] baseline written to $out")
         spark.stop()
 
       // The full webtext curation chain (crawl table in → clean corpus
       // out) as one job; stages and their order live in operators/Curate.
-      case "curate" =>
-        val Seq(in, out) = requirePositionals(positional, 2)
+      case CurateCmd(in, out, cfg, stageCounts) =>
         // same contract as ingest: plain path-based parquet writes, the
         // TableCommitter is never consulted — say so rather than silently
         // ignoring an explicitly-configured iceberg mode
@@ -200,75 +179,8 @@ object Main {
             sys.exit(2)
           case Right(_) =>
         }
-        def onOff(flag: String, default: Boolean): Boolean =
-          opts.get(flag) match {
-            case None        => default
-            case Some("on")  => true
-            case Some("off") => false
-            case Some(other) =>
-              System.err.println(
-                s"invalid --$flag: '$other' (expected on|off)\n$usage")
-              sys.exit(64)
-              throw new IllegalStateException
-          }
-        val maxPerHost = opts.get("max-per-host").map { v =>
-          val n = scala.util.Try(v.toInt).getOrElse(-1)
-          if (n < 1) {
-            System.err.println(
-              s"invalid --max-per-host: '$v' (expected int >= 1)\n$usage")
-            sys.exit(64)
-          }
-          n
-        }.getOrElse(0)
-        val stripMinDocs = opts.get("strip-boilerplate-min-docs").map { v =>
-          val n = scala.util.Try(v.toLong).getOrElse(-1L)
-          if (n != 0L && n < 2L) { // 0 = explicit off (template-friendly)
-            System.err.println("invalid --strip-boilerplate-min-docs: " +
-              s"'$v' (expected 0 = off, or int >= 2)\n$usage")
-            sys.exit(64)
-          }
-          n
-        }.getOrElse(0L)
-        val nearDup = opts.get("near-dup-jaccard").map { v =>
-          val x = scala.util.Try(v.toDouble).getOrElse(-1.0)
-          if (x < 0.0 || x > 1.0 || x.isNaN) { // 0 = explicit off
-            System.err.println("invalid --near-dup-jaccard: " +
-              s"'$v' (expected 0 = off, or a threshold in (0,1])\n$usage")
-            sys.exit(64)
-          }
-          x
-        }.getOrElse(0.0)
-        val maxSurprisal = opts.get("max-surprisal").map { v =>
-          val x = scala.util.Try(v.toDouble).getOrElse(-1.0)
-          // 0 = explicit off; Infinity would silently enable a stage that
-          // pays the corpus-wide vocab pass yet filters nothing
-          if (x < 0.0 || x.isNaN || x.isInfinity) {
-            System.err.println("invalid --max-surprisal: " +
-              s"'$v' (expected 0 = off, or a finite positive cap)\n$usage")
-            sys.exit(64)
-          }
-          x
-        }.getOrElse(0.0)
-        val cfg = graft.operators.Curate.Config(
-          nearDupJaccard = nearDup,
-          maxSurprisal = maxSurprisal,
-          blocklist = opts.get("blocklist")
-            .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-            .getOrElse(Nil),
-          dropNoindexPages = onOff("noindex", default = true),
-          unicodeNfc = onOff("unicode-nfc", default = false),
-          stripBoilerplateMinDocs = stripMinDocs,
-          c4 = onOff("c4", default = true),
-          gopher = onOff("gopher", default = true),
-          paragraphDedup = onOff("paragraph-dedup", default = true),
-          exactTextDedup = onOff("exact-dedup", default = true),
-          maxPerHost = maxPerHost,
-          qualitySample = onOff("quality-sample", default = false),
-          redactPii = onOff("redact-pii", default = false),
-          salt = opts.getOrElse("salt", "curate"))
-        if (onOff("stage-counts", default = false)) {
-          val (cleaned, counts) =
-            graft.operators.Curate.curateWithCounts(raw, cfg)
+        if (stageCounts) {
+          val (cleaned, counts) = Curate.curateWithCounts(raw, cfg)
           cleaned.write.mode("overwrite").parquet(out)
           cleaned.unpersist(false)
           val stageJson = counts.map { case (k, v) => s""""$k":$v""" }
@@ -277,8 +189,7 @@ object Main {
           println(s"[sodspark] curate wrote ${counts.last._2} of " +
             s"${counts.head._2} rows to $out")
         } else {
-          graft.operators.Curate.curate(raw, cfg)
-            .write.mode("overwrite").parquet(out)
+          Curate.curate(raw, cfg).write.mode("overwrite").parquet(out)
           // count the WRITTEN table — no second execution of the chain
           val n = spark.read.parquet(out).count()
           println(s"[sodspark] curate wrote $n rows to $out")
@@ -290,8 +201,8 @@ object Main {
       // Runs the FULL check suite per micro-batch; with --baseline, each
       // batch is also drift-scored against the green snapshot (the
       // reference's scoring-on-ingest, manager.go:385).
-      case "ingest" =>
-        val Seq(in, out) = requirePositionals(positional, 2)
+      case IngestCmd(in, out, ckpt, baselineDir, alertEndpoint, maxFiles,
+          crossBatch, refreshPolicy) =>
         // the streaming sink writes plain path parquet and never consults
         // the TableCommitter — an explicitly-configured iceberg mode is a
         // no-op here; say so once rather than silently ignoring the conf
@@ -299,46 +210,10 @@ object Main {
           System.err.println("[sodspark] note: commitMode=iceberg does not " +
             "apply to the ingest sink (path-based parquet writes); the " +
             "conf is ignored for this command")
-        val ckpt = opts.getOrElse("checkpoint", s"$out/_checkpoint")
-        // absent → the conservative default; 'all' → unbounded (explicit
-        // opt-in — the pre-r5 silent default); n → that bound
-        val maxFiles: Option[Int] = opts.get("max-files-per-trigger") match {
-          case None        => Some(graft.streaming.StreamingValidate
-            .DefaultMaxFilesPerTrigger)
-          case Some("all") => None
-          case Some(v) =>
-            v.toIntOption.filter(_ > 0).map(Some(_)).getOrElse {
-              System.err.println(s"invalid --max-files-per-trigger: '$v' " +
-                s"(expected int > 0, or 'all' for unbounded)\n$usage")
-              sys.exit(64)
-              throw new IllegalStateException
-            }
-        }
-        val crossBatch = opts.getOrElse("cross-batch-unique", "on") match {
-          case "on"  => true
-          case "off" => false // skip the per-batch history scan (batch
-                              // validate then owns the global check)
-          case other =>
-            System.err.println(
-              s"invalid --cross-batch-unique: '$other' (expected on|off)\n$usage")
-            sys.exit(64)
-            throw new IllegalStateException
-        }
-        val refreshPolicy = opts.getOrElse("baseline-refresh", "off")
-        if (!Set("off", "strict", "all")(refreshPolicy)) {
-          System.err.println(
-            s"invalid --baseline-refresh: '$refreshPolicy' (off|strict|all)\n$usage")
-          sys.exit(64)
-        }
-        if (refreshPolicy != "off" && opts.get("baseline").isEmpty) {
-          System.err.println(
-            s"--baseline-refresh $refreshPolicy requires --baseline <dir>\n$usage")
-          sys.exit(64)
-        }
         val q = graft.streaming.StreamingValidate
           .incrementalValidate(spark, in, out, ckpt,
-            baselineDir = opts.get("baseline"),
-            alertEndpoint = opts.get("alert-endpoint"),
+            baselineDir = baselineDir,
+            alertEndpoint = alertEndpoint,
             maxFilesPerTrigger = maxFiles,
             crossBatchUnique = crossBatch,
             baselineRefresh = refreshPolicy)
@@ -357,13 +232,7 @@ object Main {
       // loop — stderr carries the cause when it's a thrown error; the
       // spool is still listed below so parked entries stay visible even
       // when locked out); 64 = usage/path errors.
-      case "drain-alerts" =>
-        val Seq(out) = requirePositionals(positional, 1)
-        val ep = opts.getOrElse("alert-endpoint", {
-          System.err.println(s"drain-alerts requires --alert-endpoint\n$usage")
-          sys.exit(64)
-          throw new IllegalStateException
-        })
+      case DrainAlertsCmd(out, ep) =>
         // a typo'd outDir would be indistinguishable from a drained spool
         // (both report all-zero) — require the OUTPUT DIR to exist; the
         // spool itself may legitimately be absent (nothing ever spooled)
@@ -421,33 +290,7 @@ object Main {
       // dirs into one large-file roll-up per lineage (ST8 explicit stage).
       // Crash-safe and idempotent — re-run after any interruption; see
       // StreamCompact's commit protocol. Single maintenance writer.
-      case "compact-stream" =>
-        val Seq(outDir) = requirePositionals(positional, 1)
-        val keepRaw = opts.getOrElse("keep-batches", "2")
-        val keep = keepRaw.toIntOption.filter(_ >= 1).getOrElse {
-          System.err.println(s"invalid --keep-batches: '$keepRaw' " +
-            s"(expected an integer >= 1 — the newest batch may be replayed " +
-            s"by a restarted stream and must never be moved)\n$usage")
-          sys.exit(64); throw new IllegalStateException
-        }
-        val mbRaw = opts.getOrElse("target-file-mb", "128")
-        // upper bound keeps the byte conversion from overflowing Long into
-        // a negative value that would skip this usage check and die later
-        val targetBytes = mbRaw.toLongOption
-          .filter(mb => mb >= 1 && mb <= Long.MaxValue / (1024L * 1024))
-          .map(_ * 1024 * 1024)
-          .getOrElse {
-            System.err.println(
-              s"invalid --target-file-mb: '$mbRaw' (expected MB >= 1)\n$usage")
-            sys.exit(64); throw new IllegalStateException
-          }
-        val dryRun = opts.getOrElse("dry-run", "off") match {
-          case "on"  => true
-          case "off" => false
-          case other =>
-            System.err.println(s"invalid --dry-run: '$other' (on|off)\n$usage")
-            sys.exit(64); throw new IllegalStateException
-        }
+      case CompactStreamCmd(outDir, keep, targetBytes, dryRun) =>
         val results = graft.streaming.StreamCompact.compactAll(
           spark, outDir, keep, targetBytes, dryRun)
         val tag = if (dryRun) "compact DRY-RUN (nothing changed)" else "compact"
@@ -457,54 +300,202 @@ object Main {
       // Manifest-table maintenance: reclaim snapshot dirs superseded by
       // later commits (run after in-flight readers drain — Iceberg's
       // expire_snapshots contract). No-op on rename-mode tables.
-      case "vacuum" =>
-        val Seq(table) = requirePositionals(positional, 1)
-        // default 24h grace protects a concurrent writer's staged-but-not-
-        // yet-published snapshot; 0 only when no writer can be in flight
-        val graceRaw = opts.getOrElse("grace-hours", "24")
-        val graceMs = graceRaw.toDoubleOption match {
-          // finite only: 'Infinity' / '1e999' would make vacuum a silent
-          // permanent no-op, the opposite of what validation is for
-          case Some(h) if h >= 0 && h.isFinite => (h * 3600 * 1000).toLong
-          case _ =>
-            System.err.println(
-              s"invalid --grace-hours: '$graceRaw' (expected hours >= 0)\n$usage")
-            sys.exit(64)
-            throw new IllegalStateException
-        }
+      case VacuumCmd(table, graceMs) =>
         val removed = graft.engine.TableIO.vacuum(spark, table, graceMs)
         println(s"[sodspark] vacuumed ${removed.size} snapshot(s)" +
           (if (removed.isEmpty) "" else s": ${removed.mkString(", ")}"))
         spark.stop()
-
-      case other =>
-        System.err.println(s"unknown command: $other\n$usage")
-        sys.exit(64)
     }
   }
 
-  private def requirePositionals(positional: Seq[String], n: Int): Seq[String] = {
-    if (positional.length != n) {
-      System.err.println(
-        s"expected $n positional arguments, got ${positional.length}\n$usage")
-      sys.exit(64)
-    }
-    positional
-  }
+  /** A command line that passed [[parse]]: positionals and flag values,
+    * already typed, defaulted and checked.
+    */
+  private[graft] sealed trait Command
+  private[graft] final case class ValidateCmd(in: String, out: String,
+      ledger: Option[String], run: Option[String], partitionCol: String,
+      baseline: Option[String]) extends Command
+  private[graft] final case class SaveBaselineCmd(in: String, out: String,
+      partitionCol: String, strict: Boolean) extends Command
+  private[graft] final case class CurateCmd(in: String, out: String,
+      cfg: Curate.Config, stageCounts: Boolean) extends Command
+  private[graft] final case class IngestCmd(in: String, out: String,
+      checkpoint: String, baseline: Option[String], alertEndpoint: Option[String],
+      maxFilesPerTrigger: Option[Int], crossBatchUnique: Boolean,
+      baselineRefresh: String) extends Command
+  private[graft] final case class DrainAlertsCmd(out: String, alertEndpoint: String)
+      extends Command
+  private[graft] final case class CompactStreamCmd(outDir: String, keepBatches: Int,
+      targetFileBytes: Long, dryRun: Boolean) extends Command
+  private[graft] final case class VacuumCmd(table: String, graceMs: Long) extends Command
+
+  /** One row of the flag table: `--name`, the commands that read it, the
+    * parser of its value (None = rejected) and the stderr text a rejected
+    * value prints.
+    */
+  private final case class Flag[A](name: String, commands: Set[String],
+      read: String => Option[A], reject: String => String = (_: String) => "")
+
+  /** A flag whose every value is accepted as given. */
+  private def text(name: String, commands: String*): Flag[String] =
+    Flag(name, commands.toSet, Some(_))
+
+  private def checked[A](name: String, command: String, expected: String)(
+      read: String => Option[A]): Flag[A] =
+    Flag(name, Set(command), read, v => s"invalid --$name: '$v' ($expected)\n$usage")
+
+  private def switch(name: String, command: String,
+      expected: String = "expected on|off"): Flag[Boolean] =
+    checked(name, command, expected)(Map("on" -> true, "off" -> false).get)
+
+  private val ledger = text("ledger", "validate")
+  private val run = text("run", "validate")
+  private val partitionCol = text("partition-col", "validate", "save-baseline")
+  private val baseline = text("baseline", "validate", "ingest")
+  private val appendPolicy = Flag[String]("append-policy", Set("save-baseline"),
+    Some(_).filter(Set("strict", "all")),
+    v => s"unknown --append-policy: $v (strict|all)")
+
+  private val blocklist = Flag[Seq[String]]("blocklist", Set("curate"),
+    v => Some(v.split(",").toSeq.map(_.trim).filter(_.nonEmpty)))
+  private val salt = text("salt", "curate")
+  private val maxPerHost = checked("max-per-host", "curate", "expected int >= 1")(
+    v => scala.util.Try(v.toInt).toOption.filter(_ >= 1))
+  // 0 = explicit off (template-friendly)
+  private val stripMinDocs = checked("strip-boilerplate-min-docs", "curate",
+    "expected 0 = off, or int >= 2")(
+    v => scala.util.Try(v.toLong).toOption.filter(n => n == 0L || n >= 2L))
+  private val nearDupJaccard = checked("near-dup-jaccard", "curate",
+    "expected 0 = off, or a threshold in (0,1]")(
+    v => scala.util.Try(v.toDouble).toOption.filter(x => x >= 0.0 && x <= 1.0))
+  // 0 = explicit off; Infinity would silently enable a stage that pays the
+  // corpus-wide vocab pass yet filters nothing
+  private val maxSurprisal = checked("max-surprisal", "curate",
+    "expected 0 = off, or a finite positive cap")(
+    v => scala.util.Try(v.toDouble).toOption.filter(x => x >= 0.0 && !x.isInfinity))
+  private val noindex = switch("noindex", "curate")
+  private val unicodeNfc = switch("unicode-nfc", "curate")
+  private val c4 = switch("c4", "curate")
+  private val gopher = switch("gopher", "curate")
+  private val paragraphDedup = switch("paragraph-dedup", "curate")
+  private val exactDedup = switch("exact-dedup", "curate")
+  private val qualitySample = switch("quality-sample", "curate")
+  private val redactPii = switch("redact-pii", "curate")
+  private val stageCounts = switch("stage-counts", "curate")
+
+  private val checkpoint = text("checkpoint", "ingest")
+  private val alertEndpoint = text("alert-endpoint", "ingest", "drain-alerts")
+  // 'all' = unbounded (explicit opt-in — the pre-r5 silent default)
+  private val maxFilesPerTrigger = checked[Option[Int]]("max-files-per-trigger", "ingest",
+    "expected int > 0, or 'all' for unbounded")(v =>
+    if (v == "all") Some(None) else v.toIntOption.filter(_ > 0).map(Some(_)))
+  // off skips the per-batch history scan (batch validate then owns the
+  // global check)
+  private val crossBatchUnique = switch("cross-batch-unique", "ingest")
+  private val baselineRefresh = checked("baseline-refresh", "ingest",
+    "off|strict|all")(Some(_).filter(Set("off", "strict", "all")))
+
+  private val keepBatches = checked("keep-batches", "compact-stream",
+    "expected an integer >= 1 — the newest batch may be replayed " +
+      "by a restarted stream and must never be moved")(_.toIntOption.filter(_ >= 1))
+  // upper bound keeps the byte conversion from overflowing Long into a
+  // negative value that would pass this check and die later
+  private val targetFileBytes = checked("target-file-mb", "compact-stream",
+    "expected MB >= 1")(_.toLongOption
+    .filter(mb => mb >= 1 && mb <= Long.MaxValue / (1024L * 1024))
+    .map(_ * 1024 * 1024))
+  private val dryRun = switch("dry-run", "compact-stream", "on|off")
+
+  // default 24h grace protects a concurrent writer's staged-but-not-yet-
+  // published snapshot; 0 only when no writer can be in flight. Finite
+  // only: 'Infinity' / '1e999' would make vacuum a silent permanent no-op
+  private val graceMs = checked("grace-hours", "vacuum", "expected hours >= 0")(
+    _.toDoubleOption.filter(h => h >= 0 && h.isFinite).map(h => (h * 3600 * 1000).toLong))
+
+  /** The flag table, in the order values are checked. */
+  private val flags: Seq[Flag[_]] = Seq(ledger, run, partitionCol, baseline,
+    appendPolicy, blocklist, salt, maxPerHost, stripMinDocs, nearDupJaccard,
+    maxSurprisal, noindex, unicodeNfc, c4, gopher, paragraphDedup, exactDedup,
+    qualitySample, redactPii, stageCounts, checkpoint, alertEndpoint,
+    maxFilesPerTrigger, crossBatchUnique, baselineRefresh, keepBatches,
+    targetFileBytes, dryRun, graceMs)
 
   /** Flags each command actually reads — the parse rejects anything else. */
-  private[graft] val commandFlags: Map[String, Set[String]] = Map(
-    "validate" -> Set("ledger", "run", "partition-col", "baseline"),
-    "save-baseline" -> Set("partition-col", "append-policy"),
-    "curate" -> Set("blocklist", "noindex", "unicode-nfc",
-      "strip-boilerplate-min-docs", "c4", "gopher", "paragraph-dedup",
-      "exact-dedup", "max-surprisal", "near-dup-jaccard",
-      "max-per-host", "quality-sample", "redact-pii", "stage-counts", "salt"),
-    "ingest" -> Set("checkpoint", "baseline", "alert-endpoint",
-      "max-files-per-trigger", "cross-batch-unique", "baseline-refresh"),
-    "vacuum" -> Set("grace-hours"),
-    "compact-stream" -> Set("keep-batches", "target-file-mb", "dry-run"),
-    "drain-alerts" -> Set("alert-endpoint"))
+  private[graft] val commandFlags: Map[String, Set[String]] =
+    flags.flatMap(f => f.commands.map(_ -> f.name)).groupMapReduce(_._1)(p => Set(p._2))(_ ++ _)
+
+  private val positionals: Map[String, Int] = Map("validate" -> 2,
+    "save-baseline" -> 2, "curate" -> 2, "ingest" -> 2, "vacuum" -> 1,
+    "compact-stream" -> 1, "drain-alerts" -> 1)
+
+  /** The whole command line, checked without Spark: the command, its flag
+    * names, the positional count, every flag value and the cross-flag
+    * rules. Left is the exact text for stderr (exit 64); Right is what the
+    * command body reads.
+    */
+  private[graft] def parse(args: Array[String]): Either[String, Command] = {
+    if (args.length < 2) return Left(usage)
+    val cmd = args(0)
+    if (!positionals.contains(cmd)) return Left(s"unknown command: $cmd\n$usage")
+    val arity = positionals(cmd)
+    // Strict flag hygiene: a typo'd flag name or a flag with no value must
+    // fail loudly, not silently fall back to defaults (e.g. an ignored
+    // --append-policy would pollute the baseline with the very rows strict
+    // mode exists to exclude). Flags are validated PER COMMAND: a flag that
+    // exists but belongs to a different command (--append-policy on
+    // validate) is exactly such a silently-ignored default in disguise.
+    val (pos, opts) = parseArgs(args.drop(1), commandFlags(cmd)) match {
+      case Left(err) => return Left(s"$err\n$usage")
+      case Right(parsed) => parsed
+    }
+    if (pos.length != arity)
+      return Left(s"expected $arity positional arguments, got ${pos.length}\n$usage")
+    val rejected = flags.iterator
+      .flatMap(f => opts.get(f.name).filter(f.read(_).isEmpty).map(f.reject))
+    if (rejected.hasNext) return Left(rejected.next())
+    def get[A](f: Flag[A]): Option[A] = opts.get(f.name).flatMap(f.read)
+
+    cmd match {
+      case "validate" => Right(ValidateCmd(pos(0), pos(1), get(ledger), get(run),
+        get(partitionCol).getOrElse(""), get(baseline)))
+      case "save-baseline" => Right(SaveBaselineCmd(pos(0), pos(1),
+        get(partitionCol).getOrElse(""), get(appendPolicy).contains("strict")))
+      case "curate" =>
+        val d = Curate.Config()
+        Right(CurateCmd(pos(0), pos(1), Curate.Config(
+          blocklist = get(blocklist).getOrElse(d.blocklist),
+          dropNoindexPages = get(noindex).getOrElse(d.dropNoindexPages),
+          unicodeNfc = get(unicodeNfc).getOrElse(d.unicodeNfc),
+          stripBoilerplateMinDocs = get(stripMinDocs).getOrElse(d.stripBoilerplateMinDocs),
+          c4 = get(c4).getOrElse(d.c4),
+          gopher = get(gopher).getOrElse(d.gopher),
+          paragraphDedup = get(paragraphDedup).getOrElse(d.paragraphDedup),
+          maxSurprisal = get(maxSurprisal).getOrElse(d.maxSurprisal),
+          exactTextDedup = get(exactDedup).getOrElse(d.exactTextDedup),
+          nearDupJaccard = get(nearDupJaccard).getOrElse(d.nearDupJaccard),
+          maxPerHost = get(maxPerHost).getOrElse(d.maxPerHost),
+          qualitySample = get(qualitySample).getOrElse(d.qualitySample),
+          redactPii = get(redactPii).getOrElse(d.redactPii),
+          salt = get(salt).getOrElse(d.salt)),
+          get(stageCounts).getOrElse(false)))
+      case "ingest" =>
+        val refresh = get(baselineRefresh).getOrElse("off")
+        if (refresh != "off" && get(baseline).isEmpty)
+          Left(s"--baseline-refresh $refresh requires --baseline <dir>\n$usage")
+        else Right(IngestCmd(pos(0), pos(1),
+          get(checkpoint).getOrElse(s"${pos(1)}/_checkpoint"), get(baseline),
+          get(alertEndpoint),
+          get(maxFilesPerTrigger).getOrElse(
+            Some(graft.streaming.StreamingValidate.DefaultMaxFilesPerTrigger)),
+          get(crossBatchUnique).getOrElse(true), refresh))
+      case "drain-alerts" => get(alertEndpoint).map(DrainAlertsCmd(pos(0), _))
+        .toRight(s"drain-alerts requires --alert-endpoint\n$usage")
+      case "compact-stream" => Right(CompactStreamCmd(pos(0),
+        get(keepBatches).getOrElse(2), get(targetFileBytes).getOrElse(128L * 1024 * 1024),
+        get(dryRun).getOrElse(false)))
+      case "vacuum" => Right(VacuumCmd(pos(0), get(graceMs).getOrElse(24L * 3600 * 1000)))
+    }
+  }
 
   /** Left-to-right argument parse: positionals kept in order, each `--flag`
     * must be in `knownFlags` and followed by a non-flag value token.
@@ -537,7 +528,7 @@ object Main {
     Right((positional.result(), opts.result()))
   }
 
-  private val usage =
+  private[graft] val usage =
     """usage:
       |  graft.Main validate <inputPath> <outDir> [--ledger <dir|file.jsonl>] [--run <id>]
       |      [--partition-col <col>] [--baseline <dir>]

@@ -13,85 +13,16 @@ import org.apache.spark.sql.functions._
   * combine keeps the shuffle at O(#partitions × #stats), independent of row
   * count — this is what makes the pass viable at 10^12 rows.
   *
-  * Cardinality uses HLL++ (`approx_count_distinct`) plus a mergeable
-  * DataSketches HLL sketch (`hll_sketch_agg`, binary, unioned across resumed
-  * runs); quantiles use `percentile_approx`. Exact variants exist only in
-  * tests/oracle at small SF.
+  * Cardinality uses a mergeable DataSketches HLL sketch (`hll_sketch_agg`,
+  * binary, unioned across resumed runs); quantiles use a mergeable KLL
+  * sketch. Exact variants exist only in tests/oracle at small SF.
   */
 object StatsPass {
 
-  /** Wide per-partition stats frame. Input must carry `partition` + WebPage
-    * columns. Deterministic except the `*_approx`/sketch columns (which are
-    * deterministic for a fixed input partitioning; tests pin exact columns).
-    */
-  def partitionStats(df: DataFrame): DataFrame = {
-    val len = length(col("text"))
-    df.groupBy(col("partition"))
-      .agg(
-        count(lit(1)).as("row_cnt"),
-        sum(col("url").isNull.cast("long")).as("null_url"),
-        sum(col("text").isNull.cast("long")).as("null_text"),
-        sum(col("lang").isNull.cast("long")).as("null_lang"),
-        sum(col("html").isNull.cast("long")).as("null_html"),
-        min(col("warc_ts")).as("min_ts"),
-        max(col("warc_ts")).as("max_ts"),
-        min(len).as("min_len"),
-        max(len).as("max_len"),
-        avg(len).as("avg_len"),
-        sum(len.cast("long")).as("sum_len"),
-        approx_count_distinct(col("url")).as("distinct_url_approx"),
-        hll_sketch_agg(col("url")).as("url_hll_sketch"),
-        percentile_approx(len, array(lit(0.05), lit(0.25), lit(0.5), lit(0.75), lit(0.95)), lit(10000))
-          .as("len_quantiles"),
-        avg(length(col("html"))).as("avg_html_bytes")
-      )
-  }
-
-  /** Narrow (partition, column, stat, value) view for the `column_stats`
-    * output table — stack() stays in codegen.
-    */
-  def narrow(stats: DataFrame): DataFrame =
-    stats.select(
-      col("partition"),
-      expr(
-        """stack(6,
-           'row_cnt', cast(row_cnt as double),
-           'null_url', cast(null_url as double),
-           'null_text', cast(null_text as double),
-           'null_lang', cast(null_lang as double),
-           'avg_len', avg_len,
-           'distinct_url_approx', cast(distinct_url_approx as double)
-          ) as (stat, value)"""))
-
-  /** Lang-distribution profile per partition, fixed category order
-    * (FIXTURES.md §4): [p(en), p(de), p(fr), p(es), p(ru), p(other)].
-    * One shuffle; probabilities via conditional counts in the same agg.
+  /** Category order of the `lang_profile` drift profile (FIXTURES.md §4):
+    * [p(en), p(de), p(fr), p(es), p(ru), p(other)].
     */
   val LangOrder: Seq[String] = Seq("en", "de", "fr", "es", "ru")
-
-  def langProfiles(df: DataFrame): DataFrame = {
-    val knowns = LangOrder.map(l =>
-      (sum((col("lang") === l).cast("long")) / count(lit(1))).cast("double").as(s"p_$l"))
-    val other =
-      (sum((!col("lang").isin(LangOrder: _*) || col("lang").isNull).cast("long")) /
-        count(lit(1))).cast("double").as("p_other")
-    df.groupBy(col("partition"))
-      .agg(knowns.head, (knowns.tail :+ other): _*)
-      .select(
-        col("partition"),
-        array((LangOrder.map(l => col(s"p_$l")) :+ col("p_other")): _*).as("profile"))
-  }
-
-  /** Log-scaled text-length quantile profile per partition (FIXTURES.md §4):
-    * [q05, q25, q50, q75, q95] of ln(1 + length(text)).
-    */
-  def lengthProfiles(df: DataFrame): DataFrame = {
-    val len = log(lit(1.0) + length(col("text")).cast("double"))
-    df.groupBy(col("partition"))
-      .agg(percentile_approx(len,
-        array(lit(0.05), lit(0.25), lit(0.5), lit(0.75), lit(0.95)), lit(10000))
-        .as("profile"))
-  }
 
   /** Everything the validator needs from the aggregation side in ONE
     * scan/shuffle: the full stats block plus both drift profiles. At 10^12
@@ -162,26 +93,4 @@ object StatsPass {
         (sum(col("row_cnt")) - sum(col("null_text")))).as("avg_len"),
       hll_union_agg(col("url_hll_sketch")).as("url_hll_sketch"),
       sketch.KllAgg.kllSketchMerge(col("len_kll_sketch")).as("len_kll_sketch"))
-
-  /** Both drift profiles in ONE scan/shuffle: (partition, lang_profile,
-    * len_profile). At scale each extra profile kind must not cost another
-    * full input traversal — all profile aggregates share one groupBy.
-    */
-  def profiles(df: DataFrame): DataFrame = {
-    val len = log(lit(1.0) + length(col("text")).cast("double"))
-    val knowns = LangOrder.map(l =>
-      (sum((col("lang") === l).cast("long")) / count(lit(1))).cast("double").as(s"p_$l"))
-    val other =
-      (sum((!col("lang").isin(LangOrder: _*) || col("lang").isNull).cast("long")) /
-        count(lit(1))).cast("double").as("p_other")
-    val quant = percentile_approx(len,
-      array(lit(0.05), lit(0.25), lit(0.5), lit(0.75), lit(0.95)), lit(10000))
-      .as("len_profile")
-    df.groupBy(col("partition"))
-      .agg(knowns.head, (knowns.tail :+ other :+ quant): _*)
-      .select(
-        col("partition"),
-        array((LangOrder.map(l => col(s"p_$l")) :+ col("p_other")): _*).as("lang_profile"),
-        col("len_profile"))
-  }
 }

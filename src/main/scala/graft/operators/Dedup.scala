@@ -18,10 +18,9 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  // shiftleft/shiftright with a Column shift amount (the functions-API
-  // overloads only take Int; the underlying SQL expressions take columns).
+  // shiftright with a Column shift amount (the functions-API overload only
+  // takes Int; the underlying SQL expression takes columns).
   private def shr(v: Column, n: Column): Column = call_function("shiftright", v, n)
-  private def shl(v: Column, n: Column): Column = call_function("shiftleft", v, n)
 
   /** Exact duplicate groups by content hash: (fp, cnt, min_id, max_id).
     * Purely algebraic aggregates (r6): the previous shape collected EVERY
@@ -242,12 +241,7 @@ object Dedup {
     */
   private def cappedBucketPairs(
       banded: DataFrame, bucketCols: Seq[String], cap: Int): DataFrame = {
-    val wCap = Window.partitionBy(bucketCols.map(col): _*).orderBy(col("id"))
-    val capped = banded
-      .withColumn("__rn", row_number().over(wCap))
-      .where(col("__rn") <= cap)
-      .drop("__rn")
-    capped
+    capBuckets(banded, bucketCols.map(col), cap)
       .groupBy(bucketCols.map(col): _*)
       .agg(collect_list(col("id")).as("ids")) // ≤ cap ids: bounded memory
       .where(size(col("ids")) > 1)
@@ -256,6 +250,16 @@ object Dedup {
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
+  }
+
+  /** The first `cap` rows of each bucket in id order: the bound on
+    * within-bucket pair blowup that every bucketed pair emitter shares.
+    */
+  private def capBuckets(df: DataFrame, bucket: Seq[Column], cap: Int): DataFrame = {
+    val wCap = Window.partitionBy(bucket: _*).orderBy(col("id"))
+    df.withColumn("__rn", row_number().over(wCap))
+      .where(col("__rn") <= cap)
+      .drop("__rn")
   }
 
   /** Exact Jaccard over shingle arrays for candidate pairs. */
@@ -318,13 +322,8 @@ object Dedup {
       df.select(id.as("id"), vec.cast("array<double>").as("v")), "v")
       .withColumn("b0", Similarity.hyperplaneSketch(col("v"), bits))
     val probed = sk.select(col("id"), col("v"),
-      explode(flatten(array(
-        array(col("b0")),
-        transform(sequence(lit(0), lit(bits - 1)),
-          p => col("b0").bitwiseXOR(call_function("shiftleft", lit(1), p)))))).as("bucket"))
-    val wCap = Window.partitionBy(col("bucket")).orderBy(col("id"))
-    val capped = probed.withColumn("__rn", row_number().over(wCap))
-      .where(col("__rn") <= bucketCap).drop("__rn")
+      explode(Similarity.multiProbe(col("b0"), bits)).as("bucket"))
+    val capped = capBuckets(probed, Seq(col("bucket")), bucketCap)
     val a = capped.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
     val b = sk.select(col("b0").as("bucket"), col("id").as("id_b"), col("v").as("v_b"))
     a.join(b, Seq("bucket"))
@@ -386,11 +385,7 @@ object Dedup {
     // signature rides along in a struct so the Hamming verify needs no
     // join-back (struct ordering is by first field = id, so the id-order cap
     // semantics are unchanged)
-    val wCap = Window.partitionBy(col("chunk"), col("chunk_val"))
-      .orderBy(col("id"))
-    val capped = chunked.withColumn("__rn", row_number().over(wCap))
-      .where(col("__rn") <= bucketCap).drop("__rn")
-    capped
+    capBuckets(chunked, Seq(col("chunk"), col("chunk_val")), bucketCap)
       .groupBy(col("chunk"), col("chunk_val"))
       .agg(collect_list(struct(col("id"), col("sig"))).as("members"))
       .where(size(col("members")) > 1)

@@ -86,6 +86,17 @@ object Similarity {
   private[operators] def cleanVecs(df: DataFrame, vecCol: String): DataFrame =
     df.where(col(vecCol).isNotNull && !exists(col(vecCol), x => x.isNull))
 
+  /** Per-query top-k of (qid, cid, sim) rows: sim descending, then cid. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+  }
+
+  /** Multi-probe buckets: the sketch's own bucket and every 1-bit flip. */
+  private[operators] def multiProbe(sketch: Column, bits: Int): Column =
+    flatten(array(array(sketch), transform(sequence(lit(0), lit(bits - 1)),
+      b => sketch.bitwiseXOR(call_function("shiftleft", lit(1), b)))))
+
   /** Exact top-k by cosine for each query row.
     * `queries(qid, qvec)`, `corpus(cid, cvec)` → (qid, cid, sim, rank).
     * The query side is small by contract, so it is sized by
@@ -101,11 +112,9 @@ object Similarity {
     val c = cleanVecs(corpus.select(cid.as("cid"), cvec.as("cvec")), "cvec")
     val pairs = c.join(Broadcasts.ifFits(q),
       if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-    val scored = pairs.select(
+    topK(pairs.select(
       col("qid"), col("cid"),
-      cosine(col("qvec"), col("cvec")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      cosine(col("qvec"), col("cvec")).as("sim")), k)
   }
 
   /** ±1 sign matrix of the deterministic hyperplanes, precomputed ONCE per
@@ -252,11 +261,9 @@ object Similarity {
       .withColumn("cell", explode(probesOf(col("qvec"))))
     val pairs = assigned.join(Broadcasts.ifFits(q), Seq("cell"))
       .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-    val scored = pairs
+    topK(pairs
       .select(col("qid"), col("cid"), cosine(col("qvec"), col("cvec")).as("sim"))
-      .dropDuplicates("qid", "cid")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      .dropDuplicates("qid", "cid"), k)
   }
 
   /** LSH-bucketed ANN: corpus and queries sketched with `bits` hyperplanes;
@@ -270,20 +277,14 @@ object Similarity {
     val c = cleanVecs(corpus.select(cid.as("cid"), cvec.as("cvec")), "cvec")
       .withColumn("bucket", hyperplaneSketch(col("cvec"), bits))
     // multi-probe: query probes its own bucket and each 1-bit neighbor
-    val probes = flatten(array(
-      array(col("qsketch")),
-      transform(sequence(lit(0), lit(bits - 1)),
-        b => col("qsketch").bitwiseXOR(call_function("shiftleft", lit(1), b)))))
     val q = cleanVecs(queries.select(qid.as("qid"), qvec.as("qvec")), "qvec")
       .withColumn("qsketch", hyperplaneSketch(col("qvec"), bits))
-      .select(col("qid"), col("qvec"), explode(probes).as("bucket"))
+      .select(col("qid"), col("qvec"), explode(multiProbe(col("qsketch"), bits)).as("bucket"))
     val pairs = c.join(Broadcasts.ifFits(q), Seq("bucket"))
       .where(if (excludeSelf) col("qid") =!= col("cid") else lit(true))
-    val scored = pairs.select(
+    topK(pairs.select(
       col("qid"), col("cid"),
       cosine(col("qvec"), col("cvec")).as("sim"))
-      .dropDuplicates("qid", "cid")
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      .dropDuplicates("qid", "cid"), k)
   }
 }

@@ -247,18 +247,6 @@ object AlertSink {
     }
   }
 
-  /** Back-compat convenience (kept for the r2 call shape). */
-  def pushViolations(
-      violations: DataFrame,
-      endpoint: String,
-      bearerToken: Option[String] = None,
-      gzipBody: Boolean = false,
-      batchSize: Int = 500,
-      timeoutMs: Int = 10000,
-      spoolDir: Option[String] = None): PushResult =
-    push(violations, endpoint,
-      HttpConf(bearerToken, gzipBody, batchSize, timeoutMs), spoolDir)
-
   /** Violation rows → per-entity payload objects (the reference's alert
     * shape): rows grouped by `entityCol`, each group split into chunks of at
     * most `batchSize` rows, one JSON object `{"entityId", "data":[...]}` per

@@ -113,6 +113,26 @@ class ConstraintsSpec extends SparkSpec {
     assert(v.select("url").as[String].collect().toSeq == Seq("u2"))
   }
 
+  test("range constraint: both bounds inclusive, nulls pass, out-of-range rows flagged") {
+    import spark.implicits._
+    val df = Seq(
+      ("p1", "in", Some(5)),
+      ("p1", "at_lo", Some(1)),
+      ("p1", "at_hi", Some(10)),
+      ("p1", "null", None),
+      ("p1", "below", Some(0)),
+      ("p1", "above", Some(11))
+    ).toDF("partition", "url", "n")
+    val check = Constraints.InRange("n", lit(1), lit(10))
+    assert(check.name == "range_n")
+    val v = check.violations(df)
+      .select("url", "check_name", "observed", "expected").as[(String, String, String, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(v == Seq(
+      ("above", "range_n", "11", "[1, 10]"),
+      ("below", "range_n", "0", "[1, 10]")))
+  }
+
   test("extractTextFast == extractTextCol byte-for-byte on valid UTF-8 (r6 property pin)") {
     import spark.implicits._
     import graft.engine.TextExtract

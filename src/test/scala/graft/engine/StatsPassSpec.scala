@@ -68,13 +68,9 @@ class StatsPassSpec extends SparkSpec {
     assert(math.abs(estimate - exactDistinct).toDouble / exactDistinct < 0.05)
   }
 
-  test("narrow stats view stacks per-stat rows") {
-    val n = StatsPass.narrow(StatsPass.partitionStats(wp))
-    assert(n.select("stat").distinct().count() == 6)
-  }
-
   test("lang profiles have fixed category order") {
-    val p = StatsPass.langProfiles(wp).orderBy("partition").collect().head
+    val p = StatsPass.statsAndProfiles(wp).orderBy("partition")
+      .select("partition", "lang_profile").collect().head
     val arr = p.getSeq[Double](1)
     assert(arr.length == 6)
     // en is the dominant class in the clean fixture (~0.62)

@@ -58,12 +58,12 @@ class AlertSinkSpec extends SparkSpec {
   private def rowsIn(msgs: Seq[(String, String, String)]): Int =
     msgs.map(m => "\"violation_id\"".r.findAllIn(m._3).size).sum
 
-  test("pushViolations: batched JSON POSTs with bearer auth, all rows arrive") {
+  test("push: batched JSON POSTs with bearer auth, all rows arrive") {
     withServer() { (port, received) =>
       val v = violations
       val expected = v.count()
-      val res = AlertSink.pushViolations(
-        v, s"http://127.0.0.1:$port/alerts", bearerToken = Some("tok"), batchSize = 3)
+      val res = AlertSink.push(v, s"http://127.0.0.1:$port/alerts",
+        AlertSink.HttpConf(bearerToken = Some("tok"), batchSize = 3))
       assert(res.posted > 0 && res.pending == 0)
       val msgs = received.asScala.toSeq
       assert(msgs.size == res.posted)
@@ -104,12 +104,12 @@ class AlertSinkSpec extends SparkSpec {
     }
   }
 
-  test("pushViolations: gzip bodies decode to the same rows") {
+  test("push: gzip bodies decode to the same rows") {
     withServer() { (port, received) =>
       val v = violations
       val expected = v.count()
-      AlertSink.pushViolations(
-        v, s"http://127.0.0.1:$port/alerts", gzipBody = true, batchSize = 100)
+      AlertSink.push(v, s"http://127.0.0.1:$port/alerts",
+        AlertSink.HttpConf(gzipBody = true, batchSize = 100))
       val msgs = received.asScala.toSeq
       assert(msgs.forall(_._2 == "gzip"))
       assert(rowsIn(msgs) == expected)
