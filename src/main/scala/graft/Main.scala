@@ -1,22 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Ledger, Validator, WebSchema}
+import graft.engine.{Ledger, RenameCommitter, TableIO, Validator, WebSchema}
 import graft.operators.Curate
 
 /** spark-submit entry point:
   *
   *   spark-submit --class graft.Main sodspark.jar \
-  *     validate <inputPath> <outDir> [--ledger <dir>] [--run <id>]
+  *     validate <inputPath> <outDir> [--ledger <dir|file.jsonl>] [--run <id>]
   *        [--partition-col <col>] [--baseline <dir>]
   *   spark-submit --class graft.Main sodspark.jar \
   *     save-baseline <inputPath> <baselineDir> [--partition-col <col>]
   *
   * `validate` runs the full pass (schema gate → stats/sketches → constraints
   * → drift) over an `input_hint`-shaped table, writing violations, verdicts
-  * and column_stats under <outDir>. With --ledger, completed partitions are
+  * and column_stats under <outDir>, each partitioned by `partition` and
+  * committed partition-atomically. With --ledger, completed partitions are
   * skipped on re-run (resume). Exit code 1 when any verdict failed, 2 on
   * schema mismatch — usable as a data-quality gate in a pipeline. Usage
   * errors exit 64 from [[parse]], before a SparkSession starts, so they take
@@ -61,92 +63,42 @@ object Main {
           if (partitionCol.nonEmpty)
             raw.withColumn("partition",
               coalesce(col(partitionCol).cast("string"),
-                lit(graft.engine.Validator.UnknownPartition)))
+                lit(Validator.UnknownPartition)))
           else
             raw.withColumn("partition",
               coalesce(date_format(col("warc_ts"), "yyyy-MM-dd"),
-                lit(graft.engine.Validator.UnknownPartition)))
+                lit(Validator.UnknownPartition)))
       }
     }
 
     command match {
-      case ValidateCmd(in, out, ledger, run, partitionCol, baselineDir) =>
+      case cmd: ValidateCmd =>
         // `validate` addresses its tables as PATHS under <outDir> and routes
         // writes/reads through TableIO; commitMode=iceberg addresses catalog
         // identifiers — mixing them would write through the Iceberg committer
-        // but read nothing back (or silently bypass the configured committer on
-        // the raw-overwrite branch). `ingest` is untouched: its sink writes
+        // but read nothing back. `ingest` is untouched: its sink writes
         // plain path parquet and never consults the committer, so a fleet-wide
         // iceberg conf must not break the daily tick. `vacuum` accepts an
         // identifier and dispatches correctly.
-        if (spark.conf.get(graft.engine.TableIO.CommitModeConf, "rename") == "iceberg") {
+        if (spark.conf.get(TableIO.CommitModeConf, "rename") == "iceberg") {
           System.err.println("[sodspark] commitMode=iceberg is not supported by " +
             "the outDir/path-based validate flow; use rename or manifest here, " +
             "or drive Iceberg tables through the TableCommitter API with " +
             "catalog identifiers")
           sys.exit(64)
         }
-        val wp = load(in, partitionCol)
-        val baseline = baselineDir
-          .map(Validator.loadBaseline(spark, _)).getOrElse(Map.empty)
-        val failed: Long = ledger match {
-          case Some(ledgerDir) =>
-            val runId = run.getOrElse("run-" + java.util.UUID.randomUUID())
-            val processed = Validator.runWithLedger(
-              wp, Ledger(ledgerDir), runId, out, baselineProfiles = baseline)
-            println(s"[sodspark] processed partitions: ${processed.size}")
-            // readTable: resolves the manifest when commitMode=manifest,
-            // plain parquet read otherwise
-            graft.engine.TableIO.readTable(spark, s"$out/verdicts")
-              .where(!col("passed")).count()
-          case None =>
-            val res = Validator.validate(wp, baselineProfiles = baseline)
-            try {
-              if (spark.conf.get(graft.engine.TableIO.CommitModeConf,
-                  "rename") == "manifest") {
-                // the operator configured manifest commits (object-store
-                // deploy): honor it here too — a plain whole-dir overwrite
-                // would silently bypass the atomicity they asked for. The
-                // non-ledger CLI is a FULL REPLACE (the rename branch
-                // overwrites the whole dir), so `computed` must cover this
-                // run's partitions AND every partition any output table
-                // previously carried — otherwise stale verdicts from a
-                // prior MANIFEST-MODE run would silently survive beside
-                // this run's. (Prior RENAME-layout outputs never reach
-                // this point: writePartitionsAtomic's mode-switch guard
-                // rejects a manifest commit over rename dirs up front.)
-                import graft.engine.TableIO
-                val allParts = res.stats.select(col("partition")).distinct()
-                  .collect().map(_.getString(0)).toSeq
-                val priorParts = Seq("violations", "verdicts", "column_stats")
-                  .flatMap(t => TableIO.livePartitions(spark, s"$out/$t"))
-                Validator.commitResults(res, out,
-                  (allParts ++ priorParts).distinct)
-              } else {
-                // guard the raw-overwrite path too: mode("overwrite")
-                // non-atomically DESTROYS a manifest table's snapshots and
-                // versioned history mid-job (and under dynamic partition
-                // overwrite would instead strand readers on the stale
-                // manifest) — either way the configured commit discipline
-                // is silently violated, so fail up front
-                Seq("violations", "verdicts", "column_stats").foreach { t =>
-                  if (graft.engine.TableIO.isManifestTable(spark, s"$out/$t")) {
-                    System.err.println(s"[sodspark] $out/$t is a " +
-                      "manifest-committed table but " +
-                      s"${graft.engine.TableIO.CommitModeConf} is 'rename' — " +
-                      "set it to 'manifest' for this run or use a fresh outDir")
-                    sys.exit(64)
-                  }
-                }
-                res.violations
-                  .sortWithinPartitions(col("partition"), col("check_name"), col("url"))
-                  .write.mode("overwrite").partitionBy("partition").parquet(s"$out/violations")
-                res.verdicts.write.mode("overwrite").parquet(s"$out/verdicts")
-                res.stats.write.mode("overwrite").parquet(s"$out/column_stats")
-              }
-              res.verdicts.where(!col("passed")).count()
-            } finally res.unpersist()
-        }
+        // a commit TableIO refuses (a manifest table under rename mode, an
+        // object-store outDir under rename mode) or a missing baseline is a
+        // usage error, not a failed check. The commit threads wrap the
+        // driver-side refusal once; a task's error sits deeper, under a
+        // SparkException, and keeps its uncaught exit.
+        val failed =
+          try validate(load(cmd.in, cmd.partitionCol), cmd)
+          catch {
+            case e: Exception if Seq(e, e.getCause).exists(_.isInstanceOf[IllegalArgumentException]) =>
+              System.err.println(s"[sodspark] ${e.getMessage}")
+              sys.exit(64)
+          }
         println(s"[sodspark] failed checks: $failed")
         spark.stop()
         sys.exit(if (failed > 0) 1 else 0)
@@ -168,7 +120,7 @@ object Main {
         // same contract as ingest: plain path-based parquet writes, the
         // TableCommitter is never consulted — say so rather than silently
         // ignoring an explicitly-configured iceberg mode
-        if (spark.conf.get(graft.engine.TableIO.CommitModeConf, "rename") == "iceberg")
+        if (spark.conf.get(TableIO.CommitModeConf, "rename") == "iceberg")
           System.err.println("[sodspark] note: commitMode=iceberg does not " +
             "apply to curate (path-based parquet writes); the conf is " +
             "ignored for this command")
@@ -206,7 +158,7 @@ object Main {
         // the streaming sink writes plain path parquet and never consults
         // the TableCommitter — an explicitly-configured iceberg mode is a
         // no-op here; say so once rather than silently ignoring the conf
-        if (spark.conf.get(graft.engine.TableIO.CommitModeConf, "rename") == "iceberg")
+        if (spark.conf.get(TableIO.CommitModeConf, "rename") == "iceberg")
           System.err.println("[sodspark] note: commitMode=iceberg does not " +
             "apply to the ingest sink (path-based parquet writes); the " +
             "conf is ignored for this command")
@@ -301,11 +253,73 @@ object Main {
       // later commits (run after in-flight readers drain — Iceberg's
       // expire_snapshots contract). No-op on rename-mode tables.
       case VacuumCmd(table, graceMs) =>
-        val removed = graft.engine.TableIO.vacuum(spark, table, graceMs)
+        val removed = TableIO.vacuum(spark, table, graceMs)
         println(s"[sodspark] vacuumed ${removed.size} snapshot(s)" +
           (if (removed.isEmpty) "" else s": ${removed.mkString(", ")}"))
         spark.stop()
     }
+  }
+
+  /** The three tables `validate` writes under its outDir. */
+  private val ValidateTables = Seq("violations", "verdicts", "column_stats")
+
+  /** The `validate` command on a loaded frame (`partition` attached):
+    * runs the pass, commits its three tables through
+    * [[Validator.commitResults]] and returns the number of failed verdicts.
+    *
+    * With --ledger, done partitions are skipped and the count is read off
+    * the whole committed verdicts table. Without, the run is a FULL
+    * REPLACE of the outDir: `computed` covers this run's partitions and
+    * every partition any of the three tables served before, so no stale
+    * partition survives beside this run's, and the count comes from the
+    * verdict rows the commit returns.
+    */
+  private[graft] def validate(wp: DataFrame, cmd: ValidateCmd): Long = {
+    val spark = wp.sparkSession
+    val baseline = cmd.baseline
+      .map(Validator.loadBaseline(spark, _)).getOrElse(Map.empty)
+    cmd.ledger match {
+      case Some(ledgerPath) =>
+        val runId = cmd.run.getOrElse("run-" + java.util.UUID.randomUUID())
+        val processed = Validator.runWithLedger(
+          wp, Ledger(ledgerPath), runId, cmd.out, baselineProfiles = baseline)
+        println(s"[sodspark] processed partitions: ${processed.size}")
+        TableIO.readTable(spark, s"${cmd.out}/verdicts").where(!col("passed")).count()
+      case None =>
+        val tables = ValidateTables.map(t => s"${cmd.out}/$t")
+        // Only a rename commit replaces flat files, and an object-store
+        // outDir is refused before the pass, so no file is deleted for a
+        // commit that cannot happen. A manifest commit over an outDir an
+        // older run wrote is refused by its mode-switch guard (`violations`
+        // holds rename-layout partition dirs), so it keeps them.
+        val rename = TableIO.committerFor(spark) == RenameCommitter
+        if (rename) TableIO.requireRenameAtomicFs(new Path(cmd.out))
+        val res = Validator.validate(wp, baselineProfiles = baseline)
+        try {
+          if (rename) tables.foreach(deleteFlatFiles(spark, _))
+          val thisRun = res.stats.select(col("partition")).distinct()
+            .collect().map(_.getString(0)).toSeq
+          val prior = tables.flatMap(TableIO.livePartitions(spark, _))
+          Validator.commitResults(res, cmd.out, (thisRun ++ prior).distinct)
+            .count(!_.getAs[Boolean]("passed")).toLong
+        } finally res.unpersist()
+    }
+  }
+
+  /** Delete the data files and commit markers at a table's root (with
+    * their checksums). Ledger-less runs before partition-atomic commits
+    * wrote `verdicts` and `column_stats` unpartitioned, as `part-*` files
+    * at the root; a partitioned commit beside them would leave a table no
+    * reader can resolve. Partitioned layouts keep no such files there.
+    */
+  private def deleteFlatFiles(spark: SparkSession, table: String): Unit = {
+    val path = new Path(table)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path))
+      fs.listStatus(path)
+        .filter(s => s.isFile && Seq("part-", ".part-", "_SUCCESS", "._SUCCESS")
+          .exists(s.getPath.getName.startsWith))
+        .foreach(s => fs.delete(s.getPath, false))
   }
 
   /** A command line that passed [[parse]]: positionals and flag values,

@@ -15,21 +15,15 @@ import scala.jdk.CollectionConverters._
   * the run stopped inside its pass); outputs are idempotent (deterministic
   * violation ids), so replay is exactly-once in effect.
   *
-  * Two storage backends, selected by [[Ledger.apply]]:
-  *   - [[FileLedger]] (a directory): one tiny JSON file per partition,
-  *     written atomically (temp file + ATOMIC_MOVE). Human-greppable, ideal
-  *     at day granularity (O(10²–10³) partitions).
-  *   - [[LogLedger]] (a path ending `.jsonl`): ONE append-only JSONL log for
-  *     the whole run, last entry per partition wins. At 10⁵+ partitions
-  *     (--partition-col domain) the per-file backend costs one
-  *     open/write/rename per mark and a full directory listing per resume;
-  *     the log costs one O(line) append per mark and one sequential read
-  *     per resume. Crash mid-append leaves at most one torn trailing line,
-  *     which replay skips — the partition simply stays in its previous
-  *     state (`pending` → re-run → idempotent outputs, same recovery
-  *     contract as the reference's bulkLoad).
+  * Storage is ONE append-only JSONL log ([[LogLedger]]), last
+  * entry per partition wins: one O(line) append per mark and one
+  * sequential read per resume, so the cost stays flat at 10⁵+ partitions
+  * (--partition-col domain). Crash mid-append leaves at most one torn
+  * trailing line, which replay skips — the partition simply stays in its
+  * previous state (`pending` → re-run → idempotent outputs, same recovery
+  * contract as the reference's bulkLoad).
   *
-  * Either way the ledger is driver-side metadata: O(#partitions) entries,
+  * The ledger is driver-side metadata: O(#partitions) entries,
   * never O(rows). At cluster scale the same interface backs onto an Iceberg
   * `ledger` table where the atomic unit is the table commit (SURVEY §7.5
   * risk 4 — partition-atomic semantics preserved).
@@ -66,12 +60,45 @@ object Ledger {
       updatedRun: String
   )
 
-  /** Backend selection: a path ending `.jsonl` is the single-file log
-    * (10⁵+-partition scale); anything else is the file-per-partition
-    * directory (default, human-greppable).
+  /** Log file name inside a ledger DIRECTORY. */
+  val LogName = "ledger.jsonl"
+
+  /** The ledger at `root`: `root` itself when it ends in `.jsonl`, else
+    * `<root>/ledger.jsonl`. A directory written by the retired
+    * file-per-partition layout (one `<urlencoded-partition>.json` mark per
+    * partition, no log) is imported into the log once, so its done
+    * partitions stay done; the old marks are left in place and no longer
+    * read.
     */
   def apply(root: String): Ledger =
-    if (root.endsWith(".jsonl")) new LogLedger(root) else new FileLedger(root)
+    if (root.endsWith(".jsonl")) new LogLedger(root)
+    else {
+      val dir = Paths.get(root)
+      val log = dir.resolve(LogName)
+      if (!Files.exists(log) && Files.isDirectory(dir)) importMarks(dir, log)
+      new LogLedger(log.toString)
+    }
+
+  /** Write every parseable `*.json` mark under `dir` into a new log at
+    * `log` (temp file + atomic move: a crash mid-import leaves no log, and
+    * the next open imports again). Unparseable marks are skipped, as the
+    * old reader skipped them.
+    */
+  private def importMarks(dir: Path, log: Path): Unit = {
+    val stream = Files.list(dir)
+    val entries =
+      try stream.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".json"))
+        .flatMap(f => parse(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)))
+        .toSeq.sortBy(_.partition)
+      finally stream.close()
+    if (entries.nonEmpty) {
+      val tmp = Files.createTempFile(dir, ".ledger", ".tmp")
+      Files.write(tmp, entries.map(render).mkString("", "\n", "\n")
+        .getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, log, StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
 
   /** JSON string escape incl. CONTROL characters: an unescaped newline in a
     * partition key (possible via arbitrary --partition-col values) would
@@ -154,55 +181,12 @@ object Ledger {
   }
 }
 
-/** Directory backend: `<root>/<urlencoded-partition>.json`, atomic replace
-  * per mark. See [[Ledger]] for when to prefer [[LogLedger]].
-  */
-final class FileLedger(root: String) extends Ledger {
-
-  private val dir: Path = Paths.get(root)
-  Files.createDirectories(dir)
-
-  // partition keys may contain chars unfit for filenames; encode them.
-  private def fileFor(partition: String): Path =
-    dir.resolve(
-      java.net.URLEncoder.encode(partition, StandardCharsets.UTF_8.name()) + ".json")
-
-  def write(e: Ledger.Entry): Unit = {
-    val tmp = Files.createTempFile(dir, ".ledger", ".tmp")
-    Files.write(tmp, Ledger.render(e).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, fileFor(e.partition), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def read(partition: String): Option[Ledger.Entry] = {
-    val f = fileFor(partition)
-    if (!Files.exists(f)) None
-    else Ledger.parse(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-  }
-
-  def all(): Seq[Ledger.Entry] = {
-    // Files.list must be closed (it holds a directory fd); parse the JSON we
-    // already read instead of a redundant read(p) round-trip.
-    val stream = Files.list(dir)
-    try {
-      stream.iterator().asScala
-        .filter(_.toString.endsWith(".json"))
-        .flatMap { f =>
-          Ledger.parse(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-        }
-        .toSeq
-        .sortBy(_.partition)
-    } finally stream.close()
-  }
-}
-
-/** Single-file backend: an append-only JSONL log, one line per mark, LAST
-  * line per partition wins. O(1) I/O ops per mark, one sequential scan per
-  * resume — the right shape at 10⁵+ partitions where the directory backend's
-  * one-file-per-partition listing becomes the bottleneck.
+/** The ledger's storage: an append-only JSONL log, one line per mark,
+  * LAST line per partition wins. O(1) I/O ops per mark, one sequential scan
+  * per resume.
   *
   * Single writer per run (the scheme's standing assumption, as with
-  * [[FileLedger]] and TableIO). [[compact]] rewrites the log to one line per
+  * TableIO). [[compact]] rewrites the log to one line per
   * partition via temp-file + atomic move; it runs automatically when the log
   * accumulates > [[LogLedger.AutoCompactSlack]] superseded lines, so a
   * long-lived re-validating daemon cannot grow the log without bound.
@@ -233,7 +217,7 @@ final class LogLedger(path: String) extends Ledger {
   // decision is O(1) per write — an earlier revision called replay() (a full
   // file re-read) inside the write-path guard, which made every append past
   // the slack threshold O(log size): exactly the quadratic blowup this
-  // backend exists to avoid at 10^5+ partitions. `linesInLog` counts RAW
+  // log exists to avoid at 10^5+ partitions. `linesInLog` counts RAW
   // lines (incl. superseded and torn ones — the bloat being measured);
   // `knownPartitions` tracks distinct keys (driver-side O(#partitions)
   // strings, the same budget the interface already implies).

@@ -45,7 +45,7 @@ object TableIO {
   private[graft] val ObjectStoreSchemes =
     Set("s3", "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos")
 
-  private def requireRenameAtomicFs(p: Path): Unit = {
+  private[graft] def requireRenameAtomicFs(p: Path): Unit = {
     val scheme = Option(p.toUri.getScheme).getOrElse("file").toLowerCase
     require(!ObjectStoreSchemes.contains(scheme),
       s"TableIO's rename-swap commit is not atomic on '$scheme://' object " +
@@ -404,10 +404,7 @@ object TableIO {
     */
   def livePartitions(spark: org.apache.spark.sql.SparkSession, table: String,
       partitionCol: String = "partition"): Seq[String] =
-    committerFor(spark) match {
-      case ic: IcebergCommitter => ic.livePartitions(spark, table, partitionCol)
-      case _ => livePartitionsLocal(spark, table, partitionCol)
-    }
+    committerFor(spark).livePartitions(spark, table, partitionCol)
 
   /** Path-based partition enumeration (manifest keys, else hive dirs). */
   private[engine] def livePartitionsLocal(
@@ -479,15 +476,10 @@ object TableIO {
     * rename-mode tables too.
     */
   def readTable(spark: org.apache.spark.sql.SparkSession, table: String,
-      partitionCol: String = "partition"): DataFrame = {
-    // commitMode=iceberg: `table` is a catalog identifier, not a path —
-    // route to the committer (the write side already does; a path-style
-    // read here would silently see nothing)
-    committerFor(spark) match {
-      case ic: IcebergCommitter => ic.readTable(spark, table, partitionCol)
-      case _ => readTableLocal(spark, table, partitionCol)
-    }
-  }
+      partitionCol: String = "partition"): DataFrame =
+    // commitMode=iceberg: `table` is a catalog identifier, not a path, so
+    // the read goes through the configured committer like the write does
+    committerFor(spark).readTable(spark, table, partitionCol)
 
   /** The path-based adaptive read (manifest resolution with plain-parquet
     * fallback) — shared by both local committers, conf-independent.
@@ -548,13 +540,10 @@ object TableIO {
     */
   def vacuum(spark: org.apache.spark.sql.SparkSession, table: String,
       graceMs: Long = 24L * 3600 * 1000): Seq[String] =
-    committerFor(spark) match {
-      case ic: IcebergCommitter => ic.vacuum(spark, table, graceMs)
-      case _ => vacuumLocal(spark, table, graceMs)
-    }
+    committerFor(spark).vacuum(spark, table, graceMs)
 
-  /** Path-based snapshot reclamation (manifest mode; no-op shape on rename
-    * tables, which have no snapshot dirs).
+  /** Path-based snapshot reclamation, shared by both local committers
+    * (a no-op on rename tables, which have no snapshot dirs).
     */
   private[engine] def vacuumLocal(spark: org.apache.spark.sql.SparkSession,
       table: String, graceMs: Long = 24L * 3600 * 1000): Seq[String] = {
@@ -635,11 +624,14 @@ object RenameCommitter extends TableCommitter {
   def livePartitions(spark: org.apache.spark.sql.SparkSession, table: String,
       partitionCol: String = "partition"): Seq[String] =
     TableIO.livePartitionsLocal(spark, table, partitionCol)
-  /** Nothing to reclaim: rename commits supersede in place, and crash
-    * artifacts (.staging/.trash) are reclaimed inline by the next write.
+  /** Rename commits supersede in place and reclaim their crash artifacts
+    * (.staging/.trash) inline, so a rename table has nothing to reclaim;
+    * like the reads, this stays adaptive and vacuums a manifest-layout
+    * table's superseded snapshots.
     */
   def vacuum(spark: org.apache.spark.sql.SparkSession, table: String,
-      graceMs: Long): Seq[String] = Seq.empty
+      graceMs: Long): Seq[String] =
+    TableIO.vacuumLocal(spark, table, graceMs)
 }
 
 /** The object-store-safe manifest-pointer committer (immutable snapshot

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.parallel.CollectionConverters._
+
 /** Top-level (encoder-friendly) verdict row. */
 final case class VerdictRow(
     partition: String,
@@ -242,77 +244,51 @@ object Validator {
             Drift.LofScorer(config.lofK),
             Drift.ZScoreScorer(config.zThreshold),
             Drift.KsScorer(config.ksThreshold)))
-          val profArr = profiles.toArray
-          // Scored in parallel on the driver (pure functions over immutable
-          // profiles; output order restored by index) — single-threaded this
-          // loop is a data-proportional Amdahl term at many partitions.
-          val out = new Array[Seq[VerdictRow]](profArr.length)
-          val parallelism = math.max(1, Runtime.getRuntime.availableProcessors)
-          // A scorer that throws must fail the PASS with its own cause — an
-          // unhandled worker death would leave null out(i) slots and surface
-          // later as a bare NPE that hides the real error (or, worse, a
-          // refactor could make the loss silent). First throwable wins;
-          // rethrown after join() below.
-          val firstError =
-            new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-          val threads = (0 until parallelism).map { t =>
-            new Thread(() => try {
-              var i = t
-              while (i < profArr.length) {
-                val (p, vec) = profArr(i)
-                if (!scoredSet(p)) { out(i) = Seq.empty; i += parallelism }
-                else {
-                val baseline: IndexedSeq[Array[Double]] =
-                  baselineProfiles.getOrElse(kind, {
-                    val stride = math.max(1, (profArr.length - 1) / config.maxBaseline)
-                    val b = IndexedSeq.newBuilder[Array[Double]]
-                    var j = 0
-                    var taken = 0
-                    while (j < profArr.length && taken < config.maxBaseline) {
-                      // the null-key catch-all is scored but never a
-                      // PEER: its mixed profile is not an entity's
-                      // distribution (same exclusion as the saved models).
-                      // The null spelling cannot occur here (validate
-                      // normalizes keys at entry) — guarded anyway so the
-                      // rule holds even if a caller feeds raw profiles.
-                      if (profArr(j)._1 != p && profArr(j)._1 != null &&
-                          profArr(j)._1 != UnknownPartition &&
-                          (j % stride == 0)) {
-                        b += profArr(j)._2; taken += 1
-                      }
-                      j += 1
-                    }
-                    b.result()
-                  })
-                val belowWarmup = warm.getOrElse(p, 0L) < config.minRowsToScore
-                out(i) = scorers.map { s =>
-                  val v =
-                    if (belowWarmup) Drift.DriftSkipped
-                    else s.score(vec, baseline)
-                  v match {
-                    case Drift.DriftSkipped =>
-                      VerdictRow(p, s"${s.name}_$kind", "skipped", passed = true,
-                        Double.NaN, 0L)
-                    case Drift.DriftScored(score, drifted) =>
-                      VerdictRow(p, s"${s.name}_$kind", "scored", passed = !drifted,
-                        score, if (drifted) 1L else 0L)
-                  }
-                }
-                i += parallelism
-                }
-              }
-            } catch {
-              case e: Throwable => firstError.compareAndSet(null, e)
+          // Stride-sampled leave-one-out peers of `p`, unless a saved
+          // baseline supplies the model. The null-key catch-all is scored
+          // but never a PEER: its mixed profile is not an entity's
+          // distribution (same exclusion as the saved models). The null
+          // spelling cannot occur here (validate normalizes keys at entry)
+          // — guarded anyway so the rule holds even if a caller feeds raw
+          // profiles.
+          def baselineOf(p: String): IndexedSeq[Array[Double]] =
+            baselineProfiles.getOrElse(kind, {
+              val stride = math.max(1, (profiles.length - 1) / config.maxBaseline)
+              profiles.iterator.zipWithIndex
+                .collect { case ((q, vec), j) if q != p && q != null &&
+                  q != UnknownPartition && j % stride == 0 => vec }
+                .take(config.maxBaseline).toIndexedSeq
             })
+          def verdictsOf(p: String, vec: Array[Double]): Seq[VerdictRow] = {
+            val belowWarmup = warm.getOrElse(p, 0L) < config.minRowsToScore
+            lazy val baseline = baselineOf(p)
+            scorers.map { s =>
+              val v =
+                if (belowWarmup) Drift.DriftSkipped
+                else s.score(vec, baseline)
+              v match {
+                case Drift.DriftSkipped =>
+                  VerdictRow(p, s"${s.name}_$kind", "skipped", passed = true,
+                    Double.NaN, 0L)
+                case Drift.DriftScored(score, drifted) =>
+                  VerdictRow(p, s"${s.name}_$kind", "scored", passed = !drifted,
+                    score, if (drifted) 1L else 0L)
+              }
+            }
           }
-          threads.foreach(_.start())
-          threads.foreach(_.join())
-          Option(firstError.get()).foreach { e =>
-            throw new RuntimeException(
-              s"drift scorer failed while scoring the '$kind' profiles: " +
-                s"${e.getClass.getSimpleName}: ${e.getMessage}", e)
+          // Scored in parallel on the driver (pure functions over immutable
+          // profiles; `.par` keeps the input order) — single-threaded this
+          // loop is a data-proportional Amdahl term at many partitions. A
+          // scorer that throws fails the PASS with its own cause.
+          try profiles.toVector.par
+            .flatMap { case (p, vec) => if (scoredSet(p)) verdictsOf(p, vec) else Nil }
+            .seq
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              throw new RuntimeException(
+                s"drift scorer failed while scoring the '$kind' profiles: " +
+                  s"${e.getClass.getSimpleName}: ${e.getMessage}", e)
           }
-          out.toSeq.flatten
         }
         rows.toDF()
       }
@@ -432,10 +408,10 @@ object Validator {
   }
 
   /** Commit a pass's three output tables with partition-atomic semantics —
-    * THE one copy of the commit protocol (shared by the ledger path and
-    * the manifest-mode CLI path, so the `<global>` sentinel convention and
-    * per-table computed sets cannot drift between them). Returns the
-    * verdict rows it wrote.
+    * THE one copy of the commit protocol: every `graft.Main validate` run
+    * commits through it, with or without a ledger and in every commit
+    * mode, so the `<global>` sentinel convention and per-table computed
+    * sets have one home. Returns the verdict rows it wrote.
     *
     * `computed`: partitions this run evaluated; computed-but-empty ones
     * have their stale outputs deleted. "<global>" is appended for the two

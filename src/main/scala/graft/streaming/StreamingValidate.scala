@@ -201,19 +201,33 @@ object StreamingValidate {
       /** "off" (frozen green snapshot, the historical behavior), "strict"
         * or "all" — see [[BaselineRefresh]]. Non-off requires baselineDir.
         */
-      baselineRefresh: String = "off"): StreamingQuery = {
+      baselineRefresh: String = "off"): StreamingQuery =
+    startValidated(pages, outDir, checkpointDir, None, checks, baselineDir,
+      alertEndpoint, crossBatchUnique, baselineRefresh)
+
+  /** Start the validated stream over `source`: load the baseline and its
+    * refresh policy once, drain leftover spooled alerts once, then run
+    * [[writeValidatedBatch]] on every micro-batch. The start-time drain
+    * covers what the per-batch path never reaches: a tick with NO new input
+    * produces no micro-batch at all, and a long-running stream that goes
+    * idle (or sees only empty batches) must still deliver what spooled
+    * while the endpoint was down.
+    */
+  private def startValidated(source: DataFrame, outDir: String,
+      checkpointDir: String, trigger: Option[Trigger],
+      checks: Seq[graft.engine.Constraints.Check], baselineDir: Option[String],
+      alertEndpoint: Option[String], crossBatchUnique: Boolean,
+      baselineRefresh: String): StreamingQuery = {
+    val spark = source.sparkSession
     val baseline = baselineDir
-      .map(graft.engine.Validator.loadBaseline(pages.sparkSession, _))
+      .map(graft.engine.Validator.loadBaseline(spark, _))
       .getOrElse(Map.empty[String, IndexedSeq[Array[Double]]])
     val refresh = refreshFor(baselineDir, baselineRefresh, baseline)
-    // drain leftover spooled alerts once at stream start: a long-running
-    // stream that goes idle (or sees only empty batches, which skip the
-    // per-batch path) must still deliver what spooled while the endpoint
-    // was down — at worst delivery waits for the next batch OR restart
-    alertEndpoint.foreach(drainLeftoverAlerts(pages.sparkSession, outDir, _))
-    pages.writeStream
+    alertEndpoint.foreach(drainLeftoverAlerts(spark, outDir, _))
+    val writer = source.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
+    trigger.fold(writer)(writer.trigger)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         writeValidatedBatch(batch.toDF(), outDir, lineageOf(batch.sparkSession),
           batchId, checks,
@@ -489,14 +503,6 @@ object StreamingValidate {
         * or "all" — see [[BaselineRefresh]]. Non-off requires baselineDir.
         */
       baselineRefresh: String = "off"): StreamingQuery = {
-    val baseline = baselineDir
-      .map(graft.engine.Validator.loadBaseline(spark, _))
-      .getOrElse(Map.empty[String, IndexedSeq[Array[Double]]])
-    val refresh = refreshFor(baselineDir, baselineRefresh, baseline)
-    // a tick with NO new input produces no micro-batch at all, so spooled
-    // alerts from a down-endpoint tick would never retry through the
-    // per-batch path — drain once per tick up front (no-op when empty)
-    alertEndpoint.foreach(drainLeftoverAlerts(spark, outDir, _))
     // The two defaults COMPOSE quadratically on a first-run backfill: the
     // trigger bound splits N files into ~N/bound micro-batches, and each
     // batch's cross-batch reconciliation re-scans the accumulated pages
@@ -541,19 +547,9 @@ object StreamingValidate {
       .schema(graft.engine.WebSchema.expected)
     maxFilesPerTrigger.foreach(n =>
       reader.option("maxFilesPerTrigger", n.toString))
-    reader
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeValidatedBatch(batch.toDF(), outDir, lineageOf(batch.sparkSession),
-          batchId, checks,
-          refresh.map(_.holder.get()).getOrElse(baseline),
-          alertEndpoint, crossBatchUnique, refresh)
-      }
-      .start()
+    startValidated(reader.parquet(inDir), outDir, checkpointDir,
+      Some(Trigger.AvailableNow()), checks, baselineDir, alertEndpoint,
+      crossBatchUnique, baselineRefresh)
   }
 
   /** One scored page event entering the stateful stage. */
